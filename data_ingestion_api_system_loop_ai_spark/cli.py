@@ -92,11 +92,11 @@ def cmd_status(args) -> int:
         # live read path: serve from the streaming-maintained store
         # (the reference reads ingestionStore per request); the batch
         # closed-form below is the deterministic twin
-        from .streaming.live import status_response_from_store
-        from .streaming.serving import ServingTable
+        from .streaming.live import status_response_from_store, status_store
 
-        table = ServingTable(args.store, key_cols=["batch_id"], seq_col="drain_seq")
-        body = status_response_from_store(spark, table, args.request_id)
+        body = status_response_from_store(
+            spark, status_store(args.store), args.request_id
+        )
         print(body)
         return 0 if "Ingestion ID not found" not in body else 1
     rows = status_response(spark, args.sf_dir, args.request_id).collect()
@@ -415,10 +415,10 @@ def cmd_changes(args) -> int:
     two committed versions (default: the previous one and the latest),
     one JSON line per changed key. The CLI face of
     ``ServingTable.change_feed`` — O(changed buckets), not O(table)."""
-    from .streaming.serving import ServingTable
+    from .streaming.live import status_store
 
     spark = _spark("cli-changes")
-    table = ServingTable(args.store, key_cols=["batch_id"], seq_col="drain_seq")
+    table = status_store(args.store)
     latest = table.latest_version()
     if latest < 0:
         print("no commits in store", file=sys.stderr)
@@ -436,10 +436,10 @@ def cmd_changes(args) -> int:
 def cmd_rebucket(args) -> int:
     """Scale a serving store's bucket count (one deliberate O(table)
     rewrite; see ``ServingTable.rebucket``)."""
-    from .streaming.serving import ServingTable
+    from .streaming.live import status_store
 
     spark = _spark("cli-rebucket")
-    table = ServingTable(args.store, key_cols=["batch_id"], seq_col="drain_seq")
+    table = status_store(args.store)
     if table.latest_version() < 0:
         print("no commits in store", file=sys.stderr)
         return 1

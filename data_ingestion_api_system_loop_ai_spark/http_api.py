@@ -40,15 +40,15 @@ Routes (reference parity):
   404; handler exceptions -> the error middleware's 500
   ``Something broke!`` (``src/app.js:15-18``).
 
-Processing (``drain=True``): the listener starts ONE query over its own
-wire log, the table's only writer — ``requests_json_stream`` ->
-``registration_rows`` union ``live_priority_drain`` ->
-``attach_serving_sink(processing_time=...)`` — so each trigger registers
-new requests and dequeues one batch, and statuses progress
-``yet_to_start -> triggered -> completed`` on the trigger clock, whose
-interval IS the reference's ``RATE_LIMIT_MS``. The HTTP thread never
-computes status transitions; it only reads the table the query
-maintains. This is the reference's ``ingestionStore`` write and
+Processing (``drain=True``): the listener calls ``start_status_drain``,
+which starts ONE query over its own wire log, the table's only writer —
+``requests_json_stream`` -> ``registration_rows`` union
+``live_priority_drain`` -> ``attach_serving_sink(processing_time=...)`` —
+so each trigger registers new requests and dequeues one batch, and
+statuses progress ``yet_to_start -> triggered -> completed`` on the
+trigger clock, whose interval IS the reference's ``RATE_LIMIT_MS``. The
+HTTP thread never computes status transitions; it only reads the table
+the query maintains. This is the reference's ``ingestionStore`` write and
 ``processQueue`` ``setTimeout`` loop as one Structured Streaming query.
 
 Scale shape: the listener is per-process glue for wire parity — at
@@ -143,21 +143,13 @@ class IngestApiServer:
         drain: bool = False,
         drain_interval: str = "5 seconds",
     ) -> None:
-        from .streaming.serving import ServingTable
+        from .streaming.live import start_status_drain, status_store
 
         self.spark = spark
         self.root_dir = root_dir
         self.wire_dir = os.path.join(root_dir, "requests")
         os.makedirs(self.wire_dir, exist_ok=True)
-        # status-store convention (registration_rows): keys are
-        # per-batch, placement by request_id -> status reads are
-        # O(bucket)
-        self.table = ServingTable(
-            os.path.join(root_dir, "store"),
-            key_cols=["batch_id"],
-            seq_col="drain_seq",
-            bucket_cols=["request_id"],
-        )
+        self.table = status_store(os.path.join(root_dir, "store"))
         # serialize POST side effects (wire-log append + accepted-map
         # insert — both local; the POST path runs no Spark job beyond
         # the shared validation batch) — like the reference's
@@ -178,26 +170,12 @@ class IngestApiServer:
         self.drain_query = None
         self.registration_query = None  # registration rides the drain
         if drain:
-            from .streaming.live import (
-                live_priority_drain,
-                processing_time_ms,
-                registration_rows,
-                requests_json_stream,
-            )
-            from .streaming.serving import attach_serving_sink
-
-            # one query, one writer: drain rows win the max-seq merge
-            reqs = requests_json_stream(spark, self.wire_dir)
-            self.drain_query = attach_serving_sink(
-                registration_rows(reqs).unionByName(
-                    live_priority_drain(
-                        reqs,
-                        timeout_ms=max(processing_time_ms(drain_interval), 100),
-                    )
-                ),
+            self.drain_query = start_status_drain(
+                spark,
+                self.wire_dir,
                 self.table,
-                checkpoint=os.path.join(root_dir, "ckpt"),
-                processing_time=drain_interval,
+                os.path.join(root_dir, "ckpt"),
+                drain_interval,
             )
         handler = _make_handler(self)
         self.httpd = ThreadingHTTPServer((host, port), handler)

@@ -28,6 +28,12 @@ the 5 s start-to-start pacing (``RATE_LIMIT_MS``); in tests
 deterministic step, so priority preemption is assertable without a
 single sleep (the reference's own tests could only infer order from
 logs, ``tests/api.test.js:254-259``).
+
+``start_status_drain`` is the one place that wiring runs live: one
+query over the request wire log, ``registration_rows`` union the
+clock-paced drain, into the serving table ``status_store`` builds —
+the store's only writer (the HTTP listener calls it). Its per-trigger
+telemetry is the query's own ``recentProgress``.
 """
 
 from __future__ import annotations
@@ -41,7 +47,6 @@ import pandas as pd
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.streaming import StreamingQueryListener
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 from pyspark.sql.types import (
     ArrayType,
@@ -54,6 +59,7 @@ from pyspark.sql.types import (
 )
 
 from ..schemas import BATCH_SIZE
+from .serving import ServingTable, attach_serving_sink
 
 _EVENTS_RAW_SCHEMA = (
     "event_id long, ts long, user_id long, event_type string, value double, props string"
@@ -319,49 +325,6 @@ def use_rocksdb_state(spark: SparkSession) -> None:
     )
 
 
-class DrainMetricsListener(StreamingQueryListener):
-    """Per-batch observability for the streaming layer — the engine's
-    structured replacement for the reference's console logging of every
-    drain step (``ingestService.js:59,72,79,208`` logs batch starts,
-    processed ids, and completions to stdout). A
-    ``StreamingQueryListener`` runs on the listener bus OFF the query
-    thread, so collection costs the drain nothing; metrics arrive as
-    the engine's own progress telemetry (rows per batch, batch
-    duration, state rows) rather than print statements inside the hot
-    loop. ``for_query(query_id)`` filters to one stream when several
-    run on the session."""
-
-    def __init__(self) -> None:
-        self.batches: list[dict] = []
-        self.terminated: list[str] = []
-
-    def onQueryStarted(self, event) -> None:
-        pass
-
-    def onQueryProgress(self, event) -> None:
-        p = event.progress
-        self.batches.append(
-            {
-                "query_id": str(p.id),
-                "batch_id": p.batchId,
-                "num_input_rows": p.numInputRows,
-                "duration_ms": (p.durationMs or {}).get("triggerExecution"),
-                "state_rows": sum(
-                    s.numRowsTotal for s in (p.stateOperators or [])
-                ),
-            }
-        )
-
-    def onQueryIdle(self, event) -> None:
-        pass
-
-    def onQueryTerminated(self, event) -> None:
-        self.terminated.append(str(event.id))
-
-    def for_query(self, query_id: str) -> list[dict]:
-        return [b for b in self.batches if b["query_id"] == str(query_id)]
-
-
 def q_streaming_exec_tumbling(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Tumbling aggregation executed by the *streaming engine* (file
     source -> availableNow -> memory sink), returned as a DataFrame.
@@ -604,7 +567,7 @@ def _drain_one(key, pdf_iter, state: GroupState, timeout_ms: int | None = None):
                     "created_at_ms": int(row.created_at_ms),
                     "batch_index": int(row.batch_index),
                     "request_key": key_num,
-                    "ids": [int(x) for x in row.batch_ids],
+                    "ids": [None if pd.isna(x) else int(x) for x in row.batch_ids],
                 }
             )
     pending.sort(
@@ -703,57 +666,15 @@ def processing_time_ms(interval: str) -> int:
     return round(float(num) * ms)
 
 
-def live_drain_query(
-    requests: DataFrame,
-    checkpoint: str,
-    processing_time: str = "5 seconds",
-    queue_col: str | None = None,
-    name: str | None = None,
-):
-    """The clock-paced drain: a processingTime-triggered query whose
-    trigger interval IS the rate limit — one dequeue per tick, so
-    ``processing_time="5 seconds"`` reproduces the reference's
-    ``RATE_LIMIT_MS = 5000`` start-to-start pacing
-    (``ingestService.js:5,99-116``) with the engine's trigger clock
-    instead of ``setTimeout``. Starts the query into a named memory
-    sink and returns ``(query, sink_table_name)``; the HTTP listener
-    runs the same drain into the serving table instead.
-
-    Tests run this with a sub-second interval and assert that drain
-    rows arrive across MULTIPLE clock-paced micro-batches (each at most
-    one dequeue) — the availableNow/maxFilesPerTrigger form used
-    everywhere else is the deterministic twin."""
-    name = name or f"drain_{uuid.uuid4().hex[:8]}"
-    q = (
-        live_priority_drain(
-            requests,
-            queue_col=queue_col,
-            timeout_ms=processing_time_ms(processing_time),
-        )
-        .writeStream.outputMode("append")
-        .format("memory")
-        .queryName(name)
-        .option("checkpointLocation", checkpoint)
-        .trigger(processingTime=processing_time)
-        .start()
-    )
-    return q, name
-
-
 def registration_rows(requests: DataFrame) -> DataFrame:
     """The ``POST /ingest`` store write (reference
     ``ingestController.js:21-27``): every chunked batch as a
     ``yet_to_start`` row under the drain's output schema, with
     ``drain_seq`` 0. Drain rows carry ``drain_seq >= 1`` and win the
     serving table's max-seq-per-key merge, even when a batch is
-    registered and dequeued in the same micro-batch (the HTTP listener
-    unions these rows with its drain into one query).
-
-    Status-store convention: create the table with
-    ``bucket_cols=["request_id"]`` (keys stay per-batch) so every batch
-    of one request lands in ONE bucket directory and a status read is
-    O(bucket); the table pins this configuration on disk at first
-    commit, so later readers inherit it automatically."""
+    registered and dequeued in the same micro-batch
+    (``start_status_drain`` unions these rows with the drain into one
+    query). The table they land in is ``status_store``."""
     return chunk_requests(requests).select(
         F.lit("0").alias("queue"),
         F.lit(0).cast("long").alias("drain_seq"),
@@ -764,6 +685,47 @@ def registration_rows(requests: DataFrame) -> DataFrame:
         F.lit("yet_to_start").alias("status"),
         F.lit(None).cast("int").alias("n_pending_after"),
         F.col("batch_ids").alias("ids"),
+    )
+
+
+def status_store(path: str) -> ServingTable:
+    """The status store: keys are per-batch (``batch_id``), the
+    max-seq merge runs on ``drain_seq``, and placement is by
+    ``request_id``, so every batch of one request lands in ONE bucket
+    directory and a status read is O(bucket). The table pins this
+    configuration on disk at first commit; an existing table's on-disk
+    configuration wins over these arguments."""
+    return ServingTable(
+        path, key_cols=["batch_id"], seq_col="drain_seq", bucket_cols=["request_id"]
+    )
+
+
+def start_status_drain(
+    spark: SparkSession,
+    wire_dir: str,
+    table: ServingTable,
+    checkpoint: str,
+    processing_time: str,
+):
+    """The status store's one writer: ONE streaming query over the
+    request wire log, ``registration_rows`` union the clock-paced
+    ``live_priority_drain`` into ``attach_serving_sink``. Each trigger
+    registers newly-arrived requests and dequeues at most one batch, so
+    statuses progress ``yet_to_start -> triggered -> completed`` on the
+    trigger clock, whose interval IS the reference's ``RATE_LIMIT_MS``
+    (``ingestService.js:5,99-116``); the state timeout (one interval,
+    at least 100 ms) keeps the drain ticking while jobs are pending,
+    with no new input. Returns the started query."""
+    reqs = requests_json_stream(spark, wire_dir)
+    return attach_serving_sink(
+        registration_rows(reqs).unionByName(
+            live_priority_drain(
+                reqs, timeout_ms=max(processing_time_ms(processing_time), 100)
+            )
+        ),
+        table,
+        checkpoint=checkpoint,
+        processing_time=processing_time,
     )
 
 

@@ -187,19 +187,24 @@ class ServingTable:
         self._key_types_cache: tuple[int, dict] | None = None
 
     def _save_config(self) -> None:
+        """Pin the placement parameters on disk, rewriting the file only
+        when they changed (first commit, or a rebucket)."""
         cfg_path = os.path.join(self.path, _CONFIG)
-        if not os.path.exists(cfg_path):
-            atomic_write_text(
-                cfg_path,
-                json.dumps(
-                    {
-                        "key_cols": self.key_cols,
-                        "seq_col": self.seq_col,
-                        "num_buckets": self.num_buckets,
-                        "bucket_cols": self.bucket_cols,
-                    }
-                ),
-            )
+        text = json.dumps(
+            {
+                "key_cols": self.key_cols,
+                "seq_col": self.seq_col,
+                "num_buckets": self.num_buckets,
+                "bucket_cols": self.bucket_cols,
+            }
+        )
+        try:
+            with open(cfg_path) as f:
+                if f.read() == text:
+                    return
+        except FileNotFoundError:
+            pass
+        atomic_write_text(cfg_path, text)
 
     # -- commit protocol ---------------------------------------------------
 
@@ -252,8 +257,7 @@ class ServingTable:
 
     def _manifest(self, version: int) -> dict[int, int] | None:
         """bucket -> version whose ``v=<version>/bucket=<b>`` directory
-        holds that bucket's current rows. Two on-disk forms: the legacy
-        flat {bucket: version} map, and the current
+        holds that bucket's current rows, from the
         {"buckets": ..., "num_buckets": N} envelope (the envelope makes
         the bucket COUNT part of the atomically-committed version, so
         ``rebucket`` can change it under the same pointer-swap
@@ -261,17 +265,15 @@ class ServingTable:
         raw = self._manifest_raw(version)
         if raw is None:
             return None
-        buckets = raw["buckets"] if "buckets" in raw else raw
-        return {int(k): int(v) for k, v in buckets.items()}
+        return {int(k): int(v) for k, v in raw["buckets"].items()}
 
     def _refresh_placement(self, version: int) -> None:
-        """Adopt the bucket count the given version was committed with
-        (envelope manifests only; legacy manifests keep the config
-        value). Called before any operation that hashes keys to
-        buckets, so a reader/writer that opened the table before a
-        rebucket still routes correctly after it."""
+        """Adopt the bucket count the given version was committed with.
+        Called before any operation that hashes keys to buckets, so a
+        reader/writer that opened the table before a rebucket still
+        routes correctly after it."""
         raw = self._manifest_raw(version)
-        if raw is not None and "num_buckets" in raw:
+        if raw is not None:
             self.num_buckets = int(raw["num_buckets"])
 
     def _write_manifest(self, version: int, manifest: dict[int, int]) -> None:
@@ -356,12 +358,6 @@ class ServingTable:
         if not paths:
             return None
         df = spark.read.option("mergeSchema", "true").parquet(*paths)
-        if TOMBSTONE_COL not in df.columns:
-            return (
-                df.withColumn(TOMBSTONE_COL, F.lit(False))
-                if include_tombstones
-                else df
-            )
         if include_tombstones:
             return df
         return df.filter(~F.col(TOMBSTONE_COL)).drop(TOMBSTONE_COL)
@@ -409,12 +405,14 @@ class ServingTable:
         if b is None:
             cur = self.current(spark)
         elif b in manifest:
-            cur = spark.read.parquet(self._bucket_dir(b, manifest[b]))
+            cur = (
+                spark.read.parquet(self._bucket_dir(b, manifest[b]))
+                .filter(~F.col(TOMBSTONE_COL))
+                .drop(TOMBSTONE_COL)
+            )
         else:
             # key's bucket has no data yet: empty result, right schema
             cur = self.current(spark).limit(0)
-        if TOMBSTONE_COL in cur.columns:
-            cur = cur.filter(~F.col(TOMBSTONE_COL)).drop(TOMBSTONE_COL)
         for k, val in key_values.items():
             cur = cur.filter(F.col(k) == F.lit(val))
         return cur
@@ -448,11 +446,8 @@ class ServingTable:
                     t = pq.read_table(
                         self._bucket_dir(bk, manifest[bk]), filters=filters
                     )
-                    if TOMBSTONE_COL in t.column_names:
-                        t = t.filter(pc.equal(t[TOMBSTONE_COL], False)).drop_columns(
-                            [TOMBSTONE_COL]
-                        )
-                    rows.extend(t.to_pylist())
+                    t = t.filter(pc.equal(t[TOMBSTONE_COL], False))
+                    rows.extend(t.drop_columns([TOMBSTONE_COL]).to_pylist())
                 return rows
             except FileNotFoundError:
                 attempts -= 1
@@ -517,16 +512,10 @@ class ServingTable:
             (new_paths, "new_seq", "_new_ts"),
         ):
             if paths:
-                raw = spark.read.option("mergeSchema", "true").parquet(*paths)
-                ts = (
-                    F.coalesce(F.col(TOMBSTONE_COL), F.lit(False))
-                    if TOMBSTONE_COL in raw.columns
-                    else F.lit(False)
-                )
-                side = raw.select(
+                side = spark.read.option("mergeSchema", "true").parquet(*paths).select(
                     *self.key_cols,
                     F.col(self.seq_col).alias(alias),
-                    ts.alias(ts_alias),
+                    F.coalesce(F.col(TOMBSTONE_COL), F.lit(False)).alias(ts_alias),
                 )
             else:
                 template = old_paths or new_paths
@@ -566,6 +555,36 @@ class ServingTable:
 
     # -- writes ------------------------------------------------------------
 
+    def _publish(
+        self, df: DataFrame, base_version: int, base_manifest: dict, touched
+    ) -> int:
+        """The one commit routine: claim version ``base_version + 1``,
+        write ``df`` (carrying ``BUCKET_COL``) as its ``bucket=<b>``
+        directories, then manifest -> config -> pointer swap -> vacuum.
+        The new manifest is ``base_manifest`` minus ``touched`` plus the
+        buckets the write actually produced, so a touched bucket left
+        empty drops out. ``base_version`` is the version the caller's
+        merge read — never re-read here: a writer that raced in since
+        then makes the claim fail instead of being silently dropped."""
+        next_v = base_version + 1
+        self._claim_version(next_v)
+        vdir = os.path.join(self.path, f"v={next_v}")
+        (
+            df.repartition(max(len(touched), 1), F.col(BUCKET_COL))
+            .write.partitionBy(BUCKET_COL)
+            .mode("overwrite")
+            .parquet(vdir)
+        )
+        manifest = {b: v for b, v in base_manifest.items() if b not in touched}
+        for name in os.listdir(vdir):
+            if name.startswith(f"{BUCKET_COL}="):
+                manifest[int(name.split("=", 1)[1])] = next_v
+        self._write_manifest(next_v, manifest)
+        self._save_config()
+        self._commit(next_v)
+        self._vacuum(next_v)
+        return next_v
+
     def upsert(self, batch_df: DataFrame) -> int:
         """Merge a micro-batch: per key keep the highest-``seq_col`` row
         (new beats old; replayed rows tie with themselves — idempotent).
@@ -582,32 +601,29 @@ class ServingTable:
             )
         spark = batch_df.sparkSession
         cur_v = self.latest_version()
-        manifest = (self._manifest(cur_v) or {}) if cur_v >= 0 else {}
-        if cur_v >= 0:
-            self._refresh_placement(cur_v)
+        manifest = self._manifest(cur_v) or {}
+        self._refresh_placement(cur_v)
         if TOMBSTONE_COL not in batch_df.columns:
             batch_df = batch_df.withColumn(TOMBSTONE_COL, F.lit(False))
         batch = batch_df.withColumn(BUCKET_COL, self._bucket_expr())
-        touched = sorted(
+        touched = {
             r[BUCKET_COL] for r in batch.select(BUCKET_COL).distinct().collect()
-        )
+        }
         cur_paths = [
-            self._bucket_dir(b, manifest[b]) for b in touched if b in manifest
+            self._bucket_dir(b, manifest[b]) for b in sorted(touched) if b in manifest
         ]
         if cur_paths:
             # bucket is a partition dir, dropped on leaf-dir read;
-            # recompute it (deterministic hash of the key)
-            cur = spark.read.option("mergeSchema", "true").parquet(
-                *cur_paths
-            ).withColumn(
-                BUCKET_COL, self._bucket_expr()
-            )
-            if TOMBSTONE_COL not in cur.columns:  # pre-tombstone layout
-                cur = cur.withColumn(TOMBSTONE_COL, F.lit(False))
+            # recompute it (deterministic hash of the key).
             # allowMissingColumns: a delete batch carries only key+seq —
             # its absent value columns null-fill (nobody reads values of
             # a tombstoned row)
-            merged = cur.unionByName(batch, allowMissingColumns=True)
+            merged = (
+                spark.read.option("mergeSchema", "true")
+                .parquet(*cur_paths)
+                .withColumn(BUCKET_COL, self._bucket_expr())
+                .unionByName(batch, allowMissingColumns=True)
+            )
         else:
             merged = batch
         w = W.partitionBy(*self.key_cols).orderBy(F.col(self.seq_col).desc())
@@ -616,20 +632,7 @@ class ServingTable:
             .filter(F.col("_rn") == 1)
             .drop("_rn")
         )
-        next_v = cur_v + 1
-        self._claim_version(next_v)
-        (
-            latest.repartition(max(len(touched), 1), F.col(BUCKET_COL))
-            .write.partitionBy(BUCKET_COL)
-            .mode("overwrite")
-            .parquet(os.path.join(self.path, f"v={next_v}"))
-        )
-        new_manifest = {**manifest, **{int(b): next_v for b in touched}}
-        self._write_manifest(next_v, new_manifest)
-        self._save_config()
-        self._commit(next_v)
-        self._vacuum(next_v)
-        return next_v
+        return self._publish(latest, cur_v, manifest, touched)
 
     def delete(self, keys_df: DataFrame) -> int:
         """Row-level delete as a TOMBSTONE upsert: ``keys_df`` carries
@@ -662,52 +665,26 @@ class ServingTable:
         empty by the purge drops out of the manifest entirely.
         Returns the committed version (unchanged if nothing purged)."""
         cur_v = self.latest_version()
-        if cur_v < 0:
-            return cur_v
         self._refresh_placement(cur_v)
         manifest = self._manifest(cur_v) or {}
-        paths = [self._bucket_dir(b, vb) for b, vb in sorted(manifest.items())]
-        if not paths:
+        if not manifest:
             return cur_v
         raw = (
             spark.read.option("mergeSchema", "true")
-            .parquet(*paths)
+            .parquet(*[self._bucket_dir(b, vb) for b, vb in sorted(manifest.items())])
             .withColumn(BUCKET_COL, self._bucket_expr())
         )
-        if TOMBSTONE_COL not in raw.columns:
-            return cur_v
         dead = F.coalesce(F.col(TOMBSTONE_COL), F.lit(False)) & (
             F.col(self.seq_col) < F.lit(min_seq)
         )
-        touched = sorted(
+        touched = {
             r[BUCKET_COL]
             for r in raw.filter(dead).select(BUCKET_COL).distinct().collect()
-        )
+        }
         if not touched:
             return cur_v
-        keep = raw.filter(F.col(BUCKET_COL).isin([int(b) for b in touched])).filter(
-            ~dead
-        )
-        next_v = cur_v + 1
-        self._claim_version(next_v)
-        (
-            keep.repartition(max(len(touched), 1), F.col(BUCKET_COL))
-            .write.partitionBy(BUCKET_COL)
-            .mode("overwrite")
-            .parquet(os.path.join(self.path, f"v={next_v}"))
-        )
-        written = {
-            int(r[BUCKET_COL])
-            for r in keep.select(BUCKET_COL).distinct().collect()
-        }
-        new_manifest = {
-            b: v for b, v in manifest.items() if b not in set(touched)
-        }
-        new_manifest.update({b: next_v for b in written})
-        self._write_manifest(next_v, new_manifest)
-        self._commit(next_v)
-        self._vacuum(next_v)
-        return next_v
+        keep = raw.filter(F.col(BUCKET_COL).isin(sorted(touched)) & ~dead)
+        return self._publish(keep, cur_v, manifest, touched)
 
     def rebucket(self, spark: SparkSession, new_num_buckets: int) -> int:
         """Change the table's bucket count — the maintenance escape
@@ -722,48 +699,26 @@ class ServingTable:
         count and old directories live, and a reader that opened the
         table before the rebucket re-adopts the committed count on its
         next operation (``_refresh_placement``). The pinned config file
-        is refreshed after the commit purely as the cold-open default;
-        correctness never depends on it once an envelope manifest
-        exists."""
+        is rewritten with the new count as the cold-open default;
+        correctness never depends on it, since every operation adopts
+        the count of the version it reads."""
         if new_num_buckets < 1:
             raise ValueError("new_num_buckets must be >= 1")
         cur_v = self.latest_version()
         # raw read: tombstones MUST survive a rebucket (dropping one
         # would let a replayed lower-seq upsert revive the deleted key)
         cur = self.current(spark, include_tombstones=True)
-        if cur is None:
-            self.num_buckets = new_num_buckets
-            return cur_v
         self.num_buckets = new_num_buckets
-        next_v = cur_v + 1
-        self._claim_version(next_v)
-        rehashed = cur.withColumn(BUCKET_COL, self._bucket_expr())
-        touched = sorted(
-            r[BUCKET_COL] for r in rehashed.select(BUCKET_COL).distinct().collect()
-        )
-        (
-            rehashed.repartition(max(len(touched), 1), F.col(BUCKET_COL))
-            .write.partitionBy(BUCKET_COL)
-            .mode("overwrite")
-            .parquet(os.path.join(self.path, f"v={next_v}"))
-        )
+        if cur is None:
+            return cur_v
         # fresh manifest: every live bucket lives in the new version;
         # nothing references older directories
-        self._write_manifest(next_v, {int(b): next_v for b in touched})
-        self._commit(next_v)
-        atomic_write_text(
-            os.path.join(self.path, _CONFIG),
-            json.dumps(
-                {
-                    "key_cols": self.key_cols,
-                    "seq_col": self.seq_col,
-                    "num_buckets": self.num_buckets,
-                    "bucket_cols": self.bucket_cols,
-                }
-            ),
+        return self._publish(
+            cur.withColumn(BUCKET_COL, self._bucket_expr()),
+            cur_v,
+            {},
+            range(new_num_buckets),
         )
-        self._vacuum(next_v)
-        return next_v
 
 
 def attach_serving_sink(

@@ -172,6 +172,14 @@ def test_drain_progresses_statuses_on_the_trigger_clock(spark, tmp_path):
         assert len(spark.streams.active) == active + 1
         assert srv.registration_query is None
         assert not (root / "ckpt_reg").exists()
+        # null id elements pass validation, as in the reference (only
+        # Array.isArray and non-empty are checked), and must not kill
+        # the drain; this request drains before the next one
+        code, body = _req(
+            srv.port, "POST", "/ingest", {"ids": [1, None, 3], "priority": "HIGH"}
+        )
+        assert code == 202
+        null_rid = json.loads(body)["ingestion_id"]
         code, body = _req(
             srv.port, "POST", "/ingest", {"ids": [1, 2, 3, 4], "priority": "HIGH"}
         )
@@ -180,6 +188,9 @@ def test_drain_progresses_statuses_on_the_trigger_clock(spark, tmp_path):
         seen = set()
         deadline = time.monotonic() + 90
         while time.monotonic() < deadline:
+            # a dead drain never progresses: fail now, with its cause
+            if not srv.drain_query.isActive:
+                pytest.fail(f"drain query stopped: {srv.drain_query.exception()}")
             _code, sbody = _req(srv.port, "GET", f"/ingest/status/{rid}")
             doc = json.loads(sbody)
             seen.add(doc["status"])
@@ -194,6 +205,11 @@ def test_drain_progresses_statuses_on_the_trigger_clock(spark, tmp_path):
         # both non-terminal rollups were servable along the way or the
         # drain outpaced polling — either way the terminal doc is exact
         assert seen <= {"yet_to_start", "triggered", "completed"}
+        _code, nbody = _req(srv.port, "GET", f"/ingest/status/{null_rid}")
+        assert nbody == (
+            f'{{"ingestion_id":"{null_rid}","status":"completed","batches":'
+            f'[{{"batch_id":"{null_rid}-0","ids":[1,null,3],"status":"completed"}}]}}'
+        )
         # a cold reader of the store alone sees the same document:
         # every batch, in order, with the same ids
         cold = json.loads(

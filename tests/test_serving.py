@@ -27,6 +27,21 @@ def _write_requests(path, rows, mtime):
     os.utime(path, (mtime, mtime))
 
 
+def _assert_manifest_matches_disk(table):
+    """The latest manifest names exactly the ``bucket=`` directories on
+    disk: every entry's directory exists, and the buckets it points at
+    the latest version are the ones that version's write produced."""
+    v = table.latest_version()
+    m = table._manifest(v)
+    assert all(os.path.isdir(table._bucket_dir(b, vb)) for b, vb in m.items())
+    written = {
+        int(d.split("=", 1)[1])
+        for d in os.listdir(os.path.join(table.path, f"v={v}"))
+        if d.startswith("bucket=")
+    }
+    assert {b for b, vb in m.items() if vb == v} == written
+
+
 def _drain_to_serving(spark, tmp_path, suffix=""):
     req_dir = tmp_path / f"reqs{suffix}"
     req_dir.mkdir()
@@ -136,12 +151,14 @@ def test_upsert_rewrites_only_touched_buckets(spark, tmp_path):
         [(f"k{i}", 1, f"v{i}") for i in range(40)], "k string, seq int, val string"
     )
     table.upsert(base)
+    _assert_manifest_matches_disk(table)
     v1 = table.latest_version()
     m1 = table._manifest(v1)
     one = spark.createDataFrame(
         [("k3", 2, "updated")], "k string, seq int, val string"
     )
     table.upsert(one)
+    _assert_manifest_matches_disk(table)
     v2 = table.latest_version()
     # the new version directory holds exactly one rewritten bucket
     vdir = os.path.join(table.path, f"v={v2}")
@@ -416,6 +433,7 @@ def test_rebucket_scales_layout_and_keeps_serving(spark, tmp_path):
     v_before = t.latest_version()
     v_re = t.rebucket(spark, 8)
     assert v_re == v_before + 1 and t.num_buckets == 8
+    _assert_manifest_matches_disk(t)
     # data intact, relocated: CDC across the rebucket sees no key change
     assert t.change_feed(spark, v_before, v_re).count() == 0
     # lookups route through the NEW hash space
@@ -425,6 +443,7 @@ def test_rebucket_scales_layout_and_keeps_serving(spark, tmp_path):
     # a pre-rebucket handle adopts the committed count on its next op
     stale.upsert(spark.createDataFrame([("k3", 2, "v3b")], schema))
     assert stale.num_buckets == 8
+    _assert_manifest_matches_disk(stale)
     assert t.lookup(spark, k="k3").collect()[0]["val"] == "v3b"
     # a cold open reads the refreshed config default
     cold = ServingTable(str(tmp_path / "rb"), key_cols=["k"], seq_col="seq")
@@ -490,6 +509,7 @@ def test_purge_tombstones_reclaims_below_replay_floor(spark, tmp_path):
     v_before = t.latest_version()
     v = t.purge_tombstones(spark, min_seq=3)
     assert v == v_before + 1
+    _assert_manifest_matches_disk(t)
     raw = t.current(spark, include_tombstones=True)
     marks = {r["k"]: r["ss_deleted"] for r in raw.collect()}
     assert "a" not in marks          # purged (seq 2 < floor 3)
