@@ -4,7 +4,10 @@ the engine. Stdlib-only (``http.server``): no framework dependency, no
 install; the HTTP layer is a THIN shell, and every body it returns is
 byte-exact to the Express originals. POST bodies are assembled by the
 engine's own column expressions; status bodies are read from the
-serving table and rendered on the driver, with no Spark job.
+serving table's committed bucket directories, cached in memory, and
+rendered on the driver, with no Spark job. Every response leaves in
+one write (status line, headers and body together), so no body waits
+on Nagle for the client's delayed ACK.
 
 Routes (reference parity):
 
@@ -24,9 +27,11 @@ Routes (reference parity):
   reaches the table on the drain's trigger (``registration_rows``)
   when the drain is attached.
 - ``GET /ingest/status/<id>`` -> byte-exact 200/404 bodies from the
-  serving table (``status_response_from_store``: the request's one
-  bucket file read with pyarrow, rendered by ``render_status``) — the
-  reference's store read (``ingestController.js:35-55``). Routes match
+  serving table (``status_response_from_store``: the request's rows
+  from its one bucket directory, which ``ServingTable.lookup_rows``
+  reads with pyarrow once per committed directory and then serves from
+  memory; rendered by ``render_status``) — the reference's store read,
+  one in-memory map read (``ingestController.js:35-55``). Routes match
   the URL's pathname and the id is percent-decoded, as Express's
   ``req.params`` is, so a query string does not change the route.
   Batches the drain has not yet registered are merged in as
@@ -50,6 +55,12 @@ trigger clock, whose interval IS the reference's ``RATE_LIMIT_MS``. The
 HTTP thread never computes status transitions; it only reads the table
 the query maintains. This is the reference's ``ingestionStore`` write and
 ``processQueue`` ``setTimeout`` loop as one Structured Streaming query.
+The query has one key, the single queue, and runs on ONE state
+partition, so each trigger runs one stateful task and one state-store
+commit. A daemon thread waits on the query: if it dies with an
+exception, the exception is logged once to stderr, POST answers the
+error middleware's 500 (no accepted request could complete), and GET
+keeps serving the last committed statuses.
 
 Scale shape: the listener is per-process glue for wire parity — at
 fleet scale the POST path is a load balancer in front of N stateless
@@ -63,6 +74,7 @@ from __future__ import annotations
 
 import json
 import os
+import sys
 import threading
 import time
 import uuid
@@ -169,6 +181,9 @@ class IngestApiServer:
         )
         self.drain_query = None
         self.registration_query = None  # registration rides the drain
+        # the exception the drain query died with, set by _watch_drain;
+        # the request path reads only this attribute, never the JVM
+        self.drain_error: BaseException | None = None
         if drain:
             self.drain_query = start_status_drain(
                 spark,
@@ -177,13 +192,34 @@ class IngestApiServer:
                 os.path.join(root_dir, "ckpt"),
                 drain_interval,
             )
+            threading.Thread(target=self._watch_drain, daemon=True).start()
         handler = _make_handler(self)
         self.httpd = ThreadingHTTPServer((host, port), handler)
         self.port = self.httpd.server_address[1]
 
+    def _watch_drain(self) -> None:
+        """Block until the drain query ends. One that ends with an
+        exception can complete no request accepted from then on: keep
+        the exception, so ``post_ingest`` answers the error
+        middleware's 500, and log it once to stderr. GET keeps serving
+        the statuses the query committed. A stop by ``shutdown`` is
+        not an error."""
+        try:
+            self.drain_query.awaitTermination()
+        except Exception as exc:
+            self.drain_error = exc
+            print(
+                f"ingest listener: the drain query failed, POST /ingest "
+                f"now answers 500: {exc}",
+                file=sys.stderr,
+                flush=True,
+            )
+
     # -- request-path engine calls ------------------------------------
 
     def post_ingest(self, body: bytes) -> tuple[int, bytes]:
+        if self.drain_error is not None:
+            raise RuntimeError("the drain query failed") from self.drain_error
         line = body.decode("utf-8", errors="replace").replace("\n", " ")
         # one engine job per batching window, shared across concurrent
         # POSTs (group commit) — never one job per request
@@ -254,8 +290,15 @@ def _make_handler(api: IngestApiServer):
             self.send_response(status)
             self.send_header("Content-Type", ctype)
             self.send_header("Content-Length", str(len(body)))
-            self.end_headers()
-            self.wfile.write(body)
+            # end_headers() then write(body) would send two segments, and
+            # Nagle holds the small second one until the client's
+            # delayed ACK of the first: the status line, headers and
+            # body leave in ONE write (end_headers' work, done inline)
+            if self.request_version != "HTTP/0.9":
+                self._headers_buffer.append(b"\r\n")
+            head = b"".join(getattr(self, "_headers_buffer", []))
+            self._headers_buffer = []
+            self.wfile.write(head + body)
 
         def _json(self, status: int, body: bytes) -> None:
             self._send(status, body, "application/json; charset=utf-8")

@@ -715,18 +715,32 @@ def start_status_drain(
     trigger clock, whose interval IS the reference's ``RATE_LIMIT_MS``
     (``ingestService.js:5,99-116``); the state timeout (one interval,
     at least 100 ms) keeps the drain ticking while jobs are pending,
-    with no new input. Returns the started query."""
+    with no new input. Returns the started query.
+
+    The drain has one key, the single queue, so the query runs on ONE
+    state partition: ``spark.sql.shuffle.partitions`` is 1 while
+    ``start()`` clones the session's SQL conf into the stream, and is
+    restored afterwards. Each trigger then runs one stateful task, one
+    Python runner and one state-store commit instead of one per
+    default shuffle partition, and the ``foreachBatch`` upsert
+    shuffles into one partition too. The query stays in
+    ``spark.streams``. A checkpoint root keeps the partition count it
+    recorded at its first batch, so an older root still resumes."""
     reqs = requests_json_stream(spark, wire_dir)
-    return attach_serving_sink(
-        registration_rows(reqs).unionByName(
-            live_priority_drain(
-                reqs, timeout_ms=max(processing_time_ms(processing_time), 100)
-            )
-        ),
-        table,
-        checkpoint=checkpoint,
-        processing_time=processing_time,
+    drain = registration_rows(reqs).unionByName(
+        live_priority_drain(
+            reqs, timeout_ms=max(processing_time_ms(processing_time), 100)
+        )
     )
+    key = "spark.sql.shuffle.partitions"
+    prev = spark.conf.get(key)
+    spark.conf.set(key, "1")
+    try:
+        return attach_serving_sink(
+            drain, table, checkpoint=checkpoint, processing_time=processing_time
+        )
+    finally:
+        spark.conf.set(key, prev)
 
 
 # Jackson's string escapes, the ones Spark ``to_json`` writes: the

@@ -138,6 +138,27 @@ def spark_hash(values, types) -> int | None:
     return h - 2**32 if h >= 2**31 else h
 
 
+def _stamp(path: str | int) -> tuple[int, int]:
+    """A file's or directory's identity, by path or open descriptor:
+    ``(st_ino, st_mtime_ns)``."""
+    st = os.stat(path)
+    return st.st_ino, st.st_mtime_ns
+
+
+class _BucketDir:
+    """One committed ``bucket=<b>`` directory as the read side caches
+    it: its identity stamp, its stored column types (from one file
+    footer) and, once a ``lookup_rows`` wanted them, its live rows,
+    tombstones removed, indexed by the bucket-column values."""
+
+    __slots__ = ("stamp", "types", "rows")
+
+    def __init__(self, stamp: tuple[int, int]) -> None:
+        self.stamp = stamp
+        self.types: dict | None = None
+        self.rows: dict[tuple, list[dict]] | None = None
+
+
 class ConcurrentWriteConflict(RuntimeError):
     """Another writer claimed the version this writer was about to
     commit; re-read the table state and retry the operation."""
@@ -183,8 +204,14 @@ class ServingTable:
             self.bucket_cols = cfg["bucket_cols"]
         except FileNotFoundError:
             pass
-        # (version, stored column -> pyarrow type) for _bucket_of
-        self._key_types_cache: tuple[int, dict] | None = None
+        # read-side caches. Committed files never change, so an entry
+        # is keyed by path and valid while the path's (st_ino,
+        # st_mtime_ns) holds: a table removed and re-written at the same
+        # path is never served from them. _snap is the latest version's
+        # (version, manifest stamp, manifest, num_buckets); _dirs maps
+        # each bucket directory of that manifest to its _BucketDir
+        self._snap: tuple | None = None
+        self._dirs: dict[str, _BucketDir] = {}
 
     def _save_config(self) -> None:
         """Pin the placement parameters on disk, rewriting the file only
@@ -248,13 +275,6 @@ class ServingTable:
     def _manifest_file(self, version: int) -> str:
         return os.path.join(self.path, f"v={version}", _MANIFEST)
 
-    def _manifest_raw(self, version: int) -> dict | None:
-        try:
-            with open(self._manifest_file(version)) as f:
-                return json.load(f)
-        except FileNotFoundError:
-            return None
-
     def _manifest(self, version: int) -> dict[int, int] | None:
         """bucket -> version whose ``v=<version>/bucket=<b>`` directory
         holds that bucket's current rows, from the
@@ -262,19 +282,36 @@ class ServingTable:
         the bucket COUNT part of the atomically-committed version, so
         ``rebucket`` can change it under the same pointer-swap
         guarantee as any data commit)."""
-        raw = self._manifest_raw(version)
-        if raw is None:
+        try:
+            with open(self._manifest_file(version)) as f:
+                raw = json.load(f)
+        except FileNotFoundError:
             return None
         return {int(k): int(v) for k, v in raw["buckets"].items()}
 
-    def _refresh_placement(self, version: int) -> None:
-        """Adopt the bucket count the given version was committed with.
-        Called before any operation that hashes keys to buckets, so a
-        reader/writer that opened the table before a rebucket still
-        routes correctly after it."""
-        raw = self._manifest_raw(version)
-        if raw is not None:
-            self.num_buckets = int(raw["num_buckets"])
+    def _snapshot(self, version: int) -> dict[int, int] | None:
+        """``_manifest(version)``, adopting the bucket count the version
+        was committed with. Called before any operation that hashes
+        keys to buckets, so a reader or writer that opened the table
+        before a rebucket still routes correctly after it. The parsed
+        manifest is kept while its file's identity holds, and a new
+        one drops the cached bucket directories it no longer
+        references."""
+        try:
+            with open(self._manifest_file(version)) as f:
+                stamp = _stamp(f.fileno())
+                snap = self._snap
+                if snap is None or snap[:2] != (version, stamp):
+                    raw = json.load(f)
+                    manifest = {int(k): int(v) for k, v in raw["buckets"].items()}
+                    snap = (version, stamp, manifest, int(raw["num_buckets"]))
+                    self._snap = snap
+                    live = {self._bucket_dir(b, vb) for b, vb in manifest.items()}
+                    self._dirs = {d: e for d, e in self._dirs.items() if d in live}
+        except FileNotFoundError:
+            return None
+        self.num_buckets = snap[3]
+        return snap[2]
 
     def _write_manifest(self, version: int, manifest: dict[int, int]) -> None:
         os.makedirs(os.path.join(self.path, f"v={version}"), exist_ok=True)
@@ -362,25 +399,42 @@ class ServingTable:
             return df
         return df.filter(~F.col(TOMBSTONE_COL)).drop(TOMBSTONE_COL)
 
-    def _bucket_of(self, version: int, manifest: dict, key_values: dict) -> int | None:
+    def _bucket_entry(self, path: str, rows: bool = False) -> _BucketDir:
+        """The cached ``_BucketDir`` of the committed bucket directory
+        ``path``, started afresh when the directory's identity changed.
+        Fills in the column types from one file footer, and with
+        ``rows`` the live rows from one pyarrow read. pyarrow skips the
+        ``_SUCCESS`` and ``.crc`` files Spark leaves beside the data."""
+        stamp = _stamp(path)
+        e = self._dirs.get(path)
+        if e is None or e.stamp != stamp:
+            e = self._dirs[path] = _BucketDir(stamp)
+        if rows and e.rows is None:
+            t = pq.read_table(path)
+            live = t.filter(pc.equal(t[TOMBSTONE_COL], False))
+            index: dict[tuple, list[dict]] = {}
+            for r in live.drop_columns([TOMBSTONE_COL]).to_pylist():
+                key = tuple(r.get(c) for c in self.bucket_cols)
+                index.setdefault(key, []).append(r)
+            e.types = {f.name: f.type for f in t.schema}
+            e.rows = index
+        elif e.types is None:
+            name = next(n for n in sorted(os.listdir(path)) if n.endswith(".parquet"))
+            schema = pq.read_schema(os.path.join(path, name))
+            e.types = {f.name: f.type for f in schema}
+        return e
+
+    def _bucket_of(self, manifest: dict, key_values: dict) -> int | None:
         """The one bucket a lookup on ``key_values`` reads, hashed on
         the driver by ``spark_hash``; None when a bucket column is not
         given or has a type the port does not cover. The stored column
-        types decide the hash; they are read from one bucket file's
-        footer once per commit version (a new commit could evolve the
-        schema)."""
+        types decide the hash; they are those of the manifest's first
+        bucket directory (a new commit could evolve the schema), read
+        once per directory."""
         if not set(self.bucket_cols) <= set(key_values):
             return None
-        if self._key_types_cache is None or self._key_types_cache[0] != version:
-            b = next(iter(manifest))
-            d = self._bucket_dir(b, manifest[b])
-            f = next(n for n in sorted(os.listdir(d)) if n.endswith(".parquet"))
-            schema = pq.read_schema(os.path.join(d, f))
-            self._key_types_cache = (
-                version,
-                {n: schema.field(n).type for n in schema.names},
-            )
-        types = self._key_types_cache[1]
+        b = next(iter(manifest))
+        types = self._bucket_entry(self._bucket_dir(b, manifest[b])).types
         if not set(self.bucket_cols) <= set(types):
             return None
         h = spark_hash(
@@ -397,11 +451,10 @@ class ServingTable:
         v = self.latest_version()
         if v < 0:
             return None
-        manifest = self._manifest(v) or {}
+        manifest = self._snapshot(v)
         if not manifest:
             return None
-        self._refresh_placement(v)
-        b = self._bucket_of(v, manifest, key_values)
+        b = self._bucket_of(manifest, key_values)
         if b is None:
             cur = self.current(spark)
         elif b in manifest:
@@ -418,37 +471,54 @@ class ServingTable:
         return cur
 
     def lookup_rows(self, **key_values) -> list[dict]:
-        """``lookup`` as plain rows, read on the driver with pyarrow:
+        """``lookup`` as plain rows, served from memory on the driver:
         no Spark job. Same manifest, placement, bucket and tombstone
         rules: one bucket directory when ``_bucket_of`` resolves one,
-        every bucket of the version otherwise. pyarrow skips the
-        ``_SUCCESS`` and ``.crc`` files Spark leaves beside the data.
+        every bucket of the version otherwise.
+
+        A committed bucket directory never changes, and an upsert
+        rewrites only the buckets it touches, so each directory the
+        latest manifest references is read with pyarrow once and kept
+        (``_bucket_entry``): its live rows indexed by the bucket-column
+        values, valid while the directory's ``(st_ino, st_mtime_ns)``
+        holds. A read of a cached bucket is the pointer read, the
+        manifest's ``fstat``, a ``stat`` per bucket directory and a dict
+        hit. The rows returned are copies.
         A vacuum that removes a directory between the pointer read and
         the file read is retried against a fresh pointer."""
-        filters = [(k, "==", val) for k, val in key_values.items()] or None
         attempts = _READ_ATTEMPTS
         while True:
             v = self.latest_version()
             if v < 0:
                 return []
             try:
-                manifest = self._manifest(v)
+                manifest = self._snapshot(v)
                 if manifest is None:  # vacuumed after the pointer read
                     raise FileNotFoundError(self._manifest_file(v))
                 if not manifest:
                     return []
-                self._refresh_placement(v)
-                b = self._bucket_of(v, manifest, key_values)
-                rows = []
-                for bk in sorted(manifest) if b is None else [b]:
-                    if bk not in manifest:
-                        continue
-                    t = pq.read_table(
-                        self._bucket_dir(bk, manifest[bk]), filters=filters
-                    )
-                    t = t.filter(pc.equal(t[TOMBSTONE_COL], False))
-                    rows.extend(t.drop_columns([TOMBSTONE_COL]).to_pylist())
-                return rows
+                b = self._bucket_of(manifest, key_values)
+                if b is None:
+                    dirs = [self._bucket_dir(bk, manifest[bk]) for bk in sorted(manifest)]
+                    groups = [
+                        g
+                        for d in dirs
+                        for g in self._bucket_entry(d, rows=True).rows.values()
+                    ]
+                elif b in manifest:
+                    rows = self._bucket_entry(
+                        self._bucket_dir(b, manifest[b]), rows=True
+                    ).rows
+                    key = tuple(key_values[c] for c in self.bucket_cols)
+                    groups = [rows.get(key, [])]
+                else:
+                    return []
+                return [
+                    dict(r)
+                    for g in groups
+                    for r in g
+                    if all(r.get(k) == val for k, val in key_values.items())
+                ]
             except FileNotFoundError:
                 attempts -= 1
                 if not attempts:
@@ -601,8 +671,7 @@ class ServingTable:
             )
         spark = batch_df.sparkSession
         cur_v = self.latest_version()
-        manifest = self._manifest(cur_v) or {}
-        self._refresh_placement(cur_v)
+        manifest = self._snapshot(cur_v) or {}
         if TOMBSTONE_COL not in batch_df.columns:
             batch_df = batch_df.withColumn(TOMBSTONE_COL, F.lit(False))
         batch = batch_df.withColumn(BUCKET_COL, self._bucket_expr())
@@ -665,8 +734,7 @@ class ServingTable:
         empty by the purge drops out of the manifest entirely.
         Returns the committed version (unchanged if nothing purged)."""
         cur_v = self.latest_version()
-        self._refresh_placement(cur_v)
-        manifest = self._manifest(cur_v) or {}
+        manifest = self._snapshot(cur_v) or {}
         if not manifest:
             return cur_v
         raw = (
@@ -698,7 +766,7 @@ class ServingTable:
         as the data, so a crash anywhere mid-rebucket leaves the old
         count and old directories live, and a reader that opened the
         table before the rebucket re-adopts the committed count on its
-        next operation (``_refresh_placement``). The pinned config file
+        next operation (``_snapshot``). The pinned config file
         is rewritten with the new count as the cold-open default;
         correctness never depends on it, since every operation adopts
         the count of the version it reads."""

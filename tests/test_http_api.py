@@ -143,6 +143,122 @@ def test_error_middleware_500(server, monkeypatch):
     assert _req(server.port, "GET", "/")[0] == 200
 
 
+class _CountingWriter:
+    """A handler's ``wfile`` that records every write."""
+
+    def __init__(self, raw, log: list) -> None:
+        self._raw, self._log = raw, log
+
+    def write(self, b):
+        self._log.append(bytes(b))
+        return self._raw.write(b)
+
+    def __getattr__(self, name):
+        return getattr(self._raw, name)
+
+
+def test_each_response_is_one_write(server, monkeypatch):
+    """The status line, headers and body of every response leave in ONE
+    write on a keep-alive connection (a second small body write waits
+    on Nagle for the client's delayed ACK), with the bodies unchanged:
+    200, 202, 400, 404 and the error middleware's 500."""
+    import http.client
+
+    writes: list[bytes] = []
+    handler = server.httpd.RequestHandlerClass
+    setup = handler.setup
+
+    def counting_setup(self):
+        setup(self)
+        self.wfile = _CountingWriter(self.wfile, writes)
+
+    monkeypatch.setattr(handler, "setup", counting_setup)
+    conn = http.client.HTTPConnection("127.0.0.1", server.port, timeout=120)
+
+    def call(method, path, body=None):
+        writes.clear()
+        conn.request(method, path, body=body)
+        resp = conn.getresponse()
+        data = resp.read()
+        assert len(writes) == 1, (method, path, writes)
+        head, sent = writes[0].split(b"\r\n\r\n", 1)
+        assert sent == data
+        assert head.startswith(f"HTTP/1.1 {resp.status} ".encode())
+        return resp.status, data.decode()
+
+    try:
+        assert call("GET", "/") == (200, ROOT_BODY)
+        code, body = call("POST", "/ingest", '{"ids": [1, 2], "priority": "LOW"}')
+        rid = json.loads(body)["ingestion_id"]
+        assert (code, body) == (202, json.dumps({"ingestion_id": rid}, separators=(",", ":")))
+        code, body = call("GET", f"/ingest/status/{rid}")
+        assert code == 200 and json.loads(body)["status"] == "yet_to_start"
+        assert call("POST", "/ingest", '{"priority": "HIGH"}') == (
+            400,
+            '{"error":"Invalid input: ids array is required and cannot be empty."}',
+        )
+        assert call("GET", "/ingest/status/nope") == (
+            404,
+            '{"error":"Ingestion ID not found."}',
+        )
+        assert call("GET", "/nope") == (404, "Cannot GET /nope")
+        monkeypatch.setattr(
+            type(server),
+            "get_status",
+            lambda self, rid: (_ for _ in ()).throw(RuntimeError("boom")),
+        )
+        assert call("GET", "/ingest/status/x") == (500, ERROR_BODY)
+    finally:
+        conn.close()
+
+
+def test_post_answers_500_once_the_drain_dies(spark, tmp_path, monkeypatch, capsys):
+    """A drain query that dies with an exception can complete no
+    request accepted after it: POST answers the error middleware's 500,
+    the failure is logged once to stderr, and GET keeps serving the
+    statuses of requests accepted before."""
+    from data_ingestion_api_system_loop_ai_spark.streaming.serving import (
+        ServingTable,
+    )
+
+    def broken_upsert(self, batch_df):
+        raise RuntimeError("serving table write failed")
+
+    monkeypatch.setattr(ServingTable, "upsert", broken_upsert)
+    srv = IngestApiServer(
+        spark,
+        root_dir=str(tmp_path / "root"),
+        port=0,
+        drain=True,
+        drain_interval="1 seconds",
+    )
+    srv.start_background()
+    try:
+        code, body = _req(srv.port, "POST", "/ingest", {"ids": [1, 2], "priority": "HIGH"})
+        assert code == 202
+        rid = json.loads(body)["ingestion_id"]
+        deadline = time.monotonic() + 90
+        while srv.drain_query.isActive and time.monotonic() < deadline:
+            time.sleep(0.2)
+        assert not srv.drain_query.isActive
+        deadline = time.monotonic() + 10
+        while True:
+            code, body = _req(srv.port, "POST", "/ingest", {"ids": [3], "priority": "LOW"})
+            if code != 202 or time.monotonic() > deadline:
+                break
+            time.sleep(0.2)
+        assert (code, body) == (500, ERROR_BODY)
+        code, body = _req(srv.port, "GET", f"/ingest/status/{rid}")
+        assert code == 200 and json.loads(body)["ingestion_id"] == rid
+        assert _req(srv.port, "POST", "/ingest", {"ids": [4], "priority": "LOW"}) == (
+            500,
+            ERROR_BODY,
+        )
+        assert capsys.readouterr().err.count("the drain query failed") == 1
+    finally:
+        srv.shutdown()
+
+
 def test_drain_progresses_statuses_on_the_trigger_clock(spark, tmp_path):
     """With the clock-paced drain attached, a POSTed request's batches
     leave yet_to_start and reach completed — observed purely over HTTP.

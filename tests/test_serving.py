@@ -684,3 +684,131 @@ def test_lookup_long_key_with_python_int_hits_right_bucket(spark, tmp_path):
     for k in (0, 7, 13, 49):
         rows = t.lookup(spark, k=k).collect()
         assert len(rows) == 1 and rows[0]["v"] == k * 10, k
+
+
+def test_lookup_rows_serves_cached_buckets_exactly(spark, tmp_path, monkeypatch):
+    """lookup_rows serves each committed bucket directory from memory:
+    a second read of an untouched bucket reads no parquet, the served
+    rows equal ``lookup(spark, ...).collect()`` after an upsert, a
+    delete, a tombstone purge and a rebucket, and a table removed and
+    re-written at the same path by another handle is never served from
+    the stale cache."""
+    import shutil
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from data_ingestion_api_system_loop_ai_spark.streaming.serving import (
+        spark_hash,
+    )
+
+    reads = []
+    for name in ("read_table", "read_schema"):
+        real = getattr(pq, name)
+        monkeypatch.setattr(
+            pq,
+            name,
+            lambda *a, _real=real, **kw: reads.append(a[0]) or _real(*a, **kw),
+        )
+
+    schema = "k string, seq long, val string"
+    path = str(tmp_path / "cache")
+    t = ServingTable(path, key_cols=["k"], seq_col="seq", num_buckets=4)
+    t.upsert(spark.createDataFrame([(f"k{i}", 1, f"v{i}") for i in range(12)], schema))
+    assert t.lookup_rows(k="k3") == [{"k": "k3", "seq": 1, "val": "v3"}]
+    assert reads, "a cold bucket is read from parquet"
+    reads.clear()
+    assert t.lookup_rows(k="k3") == [{"k": "k3", "seq": 1, "val": "v3"}]
+    assert reads == []
+    # an upsert into another bucket leaves k3's directory, and its
+    # cached rows, in place
+    b3 = spark_hash(["k3"], [pa.string()]) % 4
+    other = next(
+        f"n{i}" for i in range(100) if spark_hash([f"n{i}"], [pa.string()]) % 4 != b3
+    )
+    t.upsert(spark.createDataFrame([(other, 1, "o")], schema))
+    reads.clear()
+    assert t.lookup_rows(k="k3") == [{"k": "k3", "seq": 1, "val": "v3"}]
+    assert reads == []
+
+    def rows(seq):
+        return sorted(seq, key=lambda r: r["k"])
+
+    def assert_exact():
+        keys = [f"k{i}" for i in range(12)] + [other, "absent"]
+        for key in keys:
+            want = [r.asDict() for r in t.lookup(spark, k=key).collect()]
+            assert t.lookup_rows(k=key) == want, key
+        # no bucket column given: every bucket of the version
+        assert rows(t.lookup_rows()) == rows(
+            r.asDict() for r in t.lookup(spark).collect()
+        )
+        assert rows(t.lookup_rows(val="v5")) == rows(
+            r.asDict() for r in t.lookup(spark, val="v5").collect()
+        )
+
+    t.upsert(spark.createDataFrame([("k1", 2, "v1b"), ("k20", 1, "v20")], schema))
+    assert_exact()
+    t.delete(spark.createDataFrame([("k2", 3), ("k7", 3)], "k string, seq long"))
+    assert t.lookup_rows(k="k2") == []
+    assert_exact()
+    t.purge_tombstones(spark, min_seq=4)
+    assert_exact()
+    t.rebucket(spark, 8)
+    assert_exact()
+
+    # removed and re-written at the same path: the same version number
+    # and bucket directory paths, different rows
+    small = str(tmp_path / "again")
+    a = ServingTable(small, key_cols=["k"], seq_col="seq", num_buckets=4)
+    a.upsert(spark.createDataFrame([("x", 1, "old")], schema))
+    assert a.lookup_rows(k="x") == [{"k": "x", "seq": 1, "val": "old"}]
+    shutil.rmtree(small)
+    b = ServingTable(small, key_cols=["k"], seq_col="seq", num_buckets=4)
+    assert b.upsert(spark.createDataFrame([("x", 1, "new")], schema)) == 0
+    assert a.lookup_rows(k="x") == [{"k": "x", "seq": 1, "val": "new"}]
+
+
+def test_lookup_rows_cache_under_concurrent_reads_and_commits(spark, tmp_path):
+    """Reader threads (more than cores) share one handle's cache while
+    the same handle commits: no read fails, every read of a key finds
+    exactly one row, and each thread sees that row's seq never go back
+    (a reader's pointer only moves forward, so a cache entry of an older
+    version served after a newer one would show as a lost update)."""
+    import sys
+    import threading
+
+    schema = "k string, seq long, val string"
+    t = ServingTable(str(tmp_path / "stress"), key_cols=["k"], seq_col="seq", num_buckets=4)
+    keys = [f"k{i}" for i in range(8)]
+    t.upsert(spark.createDataFrame([(k, 1, "v") for k in keys], schema))
+    stop = threading.Event()
+    errors: list = []
+
+    def reader(n: int) -> None:
+        last = 0
+        try:
+            while not stop.is_set():
+                rows = t.lookup_rows(k=keys[n % len(keys)])
+                assert len(rows) == 1, rows
+                assert rows[0]["seq"] >= last, (rows, last)
+                last = rows[0]["seq"]
+        except Exception as exc:  # reported by the main thread
+            errors.append(exc)
+
+    interval = sys.getswitchinterval()
+    sys.setswitchinterval(1e-5)
+    threads = [threading.Thread(target=reader, args=(n,)) for n in range(16)]
+    try:
+        for th in threads:
+            th.start()
+        for seq in range(2, 6):
+            t.upsert(spark.createDataFrame([(k, seq, "v") for k in keys[seq % 2 :: 2]], schema))
+    finally:
+        stop.set()
+        for th in threads:
+            th.join(timeout=60)
+        sys.setswitchinterval(interval)
+    assert not any(th.is_alive() for th in threads)
+    assert errors == []
+    assert sorted(r["seq"] for r in t.lookup_rows()) == [4, 4, 4, 4, 5, 5, 5, 5]

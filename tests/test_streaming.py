@@ -457,6 +457,7 @@ def test_live_drain_processing_time_trigger(spark, tmp_path, monkeypatch):
         t0,
     )
     table = status_store(str(tmp_path / "store_pt"))
+    shuffle_partitions = spark.conf.get("spark.sql.shuffle.partitions")
     q = start_status_drain(
         spark, str(src), table, str(tmp_path / "ckpt_pt"), "1 second"
     )
@@ -474,6 +475,16 @@ def test_live_drain_processing_time_trigger(spark, tmp_path, monkeypatch):
         # so the two dequeues took two upserts
         assert all(n <= 1 for n in drained), drained
         assert sum(n == 1 for n in drained) >= 2, drained
+        # the single-queue drain runs on one state partition, and the
+        # session's own setting is left as it was
+        assert q.id in {a.id for a in spark.streams.active}
+        parts = {
+            op["numShufflePartitions"]
+            for p in q.recentProgress
+            for op in p["stateOperators"]
+        }
+        assert parts == {1}, parts
+        assert spark.conf.get("spark.sql.shuffle.partitions") == shuffle_partitions
     finally:
         q.stop()
 
