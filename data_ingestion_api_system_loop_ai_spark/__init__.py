@@ -6,7 +6,7 @@ similarity search, text analysis, multimodal plumbing, streaming).
 Layout
 ------
 - ``session``    : tuned SparkSession builder (local test / cluster profiles)
-- ``schemas``    : fixed StructTypes for every table and pipeline record
+- ``schemas``    : pipeline constants (batch size, rate limit) and table names
 - ``sources``    : parquet/csv/json loaders for the test star schema
 - ``functions``  : reusable column expression builders (text, vectors, priority)
 - ``operators``  : the query/operator inventory from SURVEY.md section 2

@@ -84,17 +84,23 @@ from pyspark.sql import functions as F
 from ..sources import commit_protocol
 from ..sources.loader import load_table
 from .similarity import (
+    candidate_side,
+    capped_pool,
+    code_arrays,
     ivf_assign,
     ivf_centroids,
     ivf_probe,
     ivf_seeds,
-    norm_expr,
+    max_merge,
+    pair_cosine,
     pq_codebooks,
     pq_encode,
+    pq_search,
     pq_subvectors,
+    query_side,
+    topk,
 )
 
-_MARKER = commit_protocol.BUILD_MARKER
 _UNIT_TABLES = ("assignments", "pq_codes", "edges")
 
 
@@ -188,7 +194,7 @@ def build_ann_index(spark: SparkSession, sf_dir: str, index_path: str) -> None:
     cb = pq_codebooks(e, subs)
     cb.write.mode("overwrite").parquet(os.path.join(index_path, "pq_codebooks"))
     cb_back = spark.read.parquet(os.path.join(index_path, "pq_codebooks"))
-    _code_rows(e, subs, cb_back).write.mode("overwrite").parquet(
+    code_arrays(pq_encode(e, subs, cb_back)).write.mode("overwrite").parquet(
         os.path.join(index_path, "pq_codes", f"unit={unit}")
     )
     # the finished kNN graph (VERDICT r10 #1): the build runs ONCE
@@ -234,23 +240,6 @@ def build_ann_index(spark: SparkSession, sf_dir: str, index_path: str) -> None:
     commit_protocol.write_marker(index_path)
 
 
-def _code_rows(
-    e: DataFrame, subs: DataFrame | None, cb: DataFrame
-) -> DataFrame:
-    """(vec_id, code array<long>[M]) — the stored PQ code rows; shared
-    by the build and the append so both encode identically."""
-    return (
-        pq_encode(e, subs, cb)
-        .groupBy("vec_id")
-        .agg(
-            F.transform(
-                F.array_sort(F.collect_list(F.struct("m", "code"))),
-                lambda s: s["code"],
-            ).alias("code")
-        )
-    )
-
-
 def q_similarity_ivf_from_index(
     spark: SparkSession, sf_dir: str, index_path: str
 ) -> DataFrame:
@@ -275,15 +264,6 @@ def q_similarity_pq_from_index(
     decimal-exact ADC sum, and re-ranks the shortlist with exact
     cosines against the source vectors (the refine step reads raw
     embeddings only for R*nq candidate ids)."""
-    from pyspark.sql import Window as W
-
-    from .similarity import (
-        PQ_SHORTLIST,
-        PQ_TOPK,
-        _l2_expr,
-        dot_expr,
-    )
-
     _require(index_path)
     e = load_table(spark, sf_dir, "embeddings")
     cb = spark.read.parquet(os.path.join(index_path, "pq_codebooks"))
@@ -292,60 +272,8 @@ def q_similarity_pq_from_index(
         .select("vec_id", F.posexplode("code").alias("m", "code"))
         .select("vec_id", F.col("m").cast("long").alias("m"), "code")
     )
-    dtable = (
-        pq_subvectors(e.filter(F.col("vec_id") % 100 == 0))
-        .join(F.broadcast(cb), "m")
-        .select(
-            F.col("vec_id").alias("query_id"),
-            "m",
-            "c",
-            _l2_expr("sv", "cw").alias("d"),
-        )
-    )
-    adc = (
-        codes.join(
-            F.broadcast(dtable),
-            (codes.m == dtable.m) & (codes.code == dtable.c),
-        )
-        .filter(F.col("vec_id") != F.col("query_id"))
-        .groupBy("query_id", F.col("vec_id").alias("neighbor_id"))
-        .agg(
-            F.round(
-                F.sum(F.col("d").cast("decimal(25,12)")).cast("double"), 6
-            ).alias("approx_d")
-        )
-    )
-    ws = W.partitionBy("query_id").orderBy("approx_d", "neighbor_id")
-    short = (
-        adc.withColumn("srnk", F.row_number().over(ws))
-        .filter(F.col("srnk") <= PQ_SHORTLIST)
-        .select("query_id", "neighbor_id")
-    )
-    qv = e.filter(F.col("vec_id") % 100 == 0).select(
-        F.col("vec_id").alias("query_id"),
-        F.col("embedding").alias("q_emb"),
-        norm_expr("embedding").alias("q_norm"),
-    )
-    cv = e.select(
-        F.col("vec_id").alias("neighbor_id"),
-        F.col("embedding").alias("c_emb"),
-        norm_expr("embedding").alias("c_norm"),
-    )
-    refined = (
-        cv.join(F.broadcast(short), "neighbor_id")
-        .join(F.broadcast(qv), "query_id")
-        .select(
-            "query_id",
-            "neighbor_id",
-            F.round(
-                dot_expr("q_emb", "c_emb") / (F.col("q_norm") * F.col("c_norm")), 6
-            ).alias("cosine"),
-        )
-    )
-    w = W.partitionBy("query_id").orderBy(F.col("cosine").desc(), "neighbor_id")
-    return (
-        refined.withColumn("rnk", F.row_number().over(w).cast("long"))
-        .filter(F.col("rnk") <= PQ_TOPK)
+    return pq_search(
+        e, pq_subvectors(e.filter(F.col("vec_id") % 100 == 0)), cb, codes
     )
 
 
@@ -411,15 +339,13 @@ def _append_units(
 ) -> None:
     """The three unit writes + commit of ``append_ann_index`` (split
     out so the caller can release the batch checkpoint in a finally)."""
-    from .similarity import dot_expr
-
     new_vecs = new_asg.select("vec_id", "embedding")
     new_asg.write.mode("overwrite").parquet(
         os.path.join(index_path, "assignments", f"unit={label}")
     )
     cb = spark.read.parquet(os.path.join(index_path, "pq_codebooks"))
     subs = pq_subvectors(new_vecs)
-    _code_rows(new_vecs, subs, cb).write.mode("overwrite").parquet(
+    code_arrays(pq_encode(new_vecs, subs, cb)).write.mode("overwrite").parquet(
         os.path.join(index_path, "pq_codes", f"unit={label}")
     )
     # seed-quality candidate edges: pool = committed assignments capped
@@ -437,62 +363,31 @@ def _append_units(
     # single window over the union let a hot cell's low-id history
     # evict the batch's own members, hiding in-batch duplicate pairs —
     # now the batch always competes, at the same O(batch·budget) cost).
-    from pyspark.sql import Window as W
-
     budget = read_build_config(index_path)["budget"]
     batch_cells = new_asg.select("cell").distinct()
     hist = (
         _read_units(spark, index_path, "assignments", exclude_unit=label)
         .join(F.broadcast(batch_cells), "cell", "left_semi")
     )
-    wc = W.partitionBy("cell").orderBy("neighbor_id")
-    hist_capped = (
-        hist.select(
-            F.col("vec_id").alias("neighbor_id"),
-            F.col("embedding").alias("c_emb"),
-            F.col("v_norm").alias("c_norm"),
-            "cell",
-        )
-        .withColumn("_crn", F.row_number().over(wc))
-        .filter(F.col("_crn") <= budget)
-        .drop("_crn")
-    )
-    cand = hist_capped.unionByName(
-        new_asg.select(
-            F.col("vec_id").alias("neighbor_id"),
-            F.col("embedding").alias("c_emb"),
-            F.col("v_norm").alias("c_norm"),
-            "cell",
-        )
-    )
-    q = new_asg.select(
-        F.col("vec_id").alias("query_id"),
-        F.col("embedding").alias("q_emb"),
-        F.col("v_norm").alias("q_norm"),
-        "cell",
-    )
+    cand = capped_pool(
+        candidate_side(hist, "cell"), "cell", "neighbor_id", budget
+    ).unionByName(candidate_side(new_asg, "cell"))
     scored = (
-        q.join(cand, "cell")
+        query_side(new_asg, "cell")
+        .join(cand, "cell")
         .filter(F.col("neighbor_id") != F.col("query_id"))
-        .select(
-            "query_id",
-            "neighbor_id",
-            F.round(
-                dot_expr("q_emb", "c_emb") / (F.col("q_norm") * F.col("c_norm")),
-                6,
-            ).alias("cosine"),
-        )
+        .select("query_id", "neighbor_id", pair_cosine())
     )
     # cosine is symmetric: the same scored rows serve both orientations
     # (new node's own list, and existing queries gaining the new node)
-    scored.unionByName(
-        scored.select(
-            F.col("neighbor_id").alias("query_id"),
-            F.col("query_id").alias("neighbor_id"),
-            "cosine",
+    max_merge(
+        scored.unionByName(
+            scored.select(
+                F.col("neighbor_id").alias("query_id"),
+                F.col("query_id").alias("neighbor_id"),
+                "cosine",
+            )
         )
-    ).groupBy("query_id", "neighbor_id").agg(
-        F.max("cosine").alias("cosine")
     ).write.mode("overwrite").parquet(
         os.path.join(index_path, "edges", f"unit={label}")
     )
@@ -615,23 +510,10 @@ def read_knn_edges(spark: SparkSession, index_path: str) -> DataFrame:
     Cost shape: one scan of n·k-ish rows + one k-bounded window — the
     near-read-cost query path the from-index forms promise; the seed
     probes and NN-Descent rounds never run here."""
-    from pyspark.sql import Window as W
-
     from .similarity import KNN_K
 
     _require(index_path)
-    merged = (
-        _read_units(spark, index_path, "edges")
-        .groupBy("query_id", "neighbor_id")
-        .agg(F.max("cosine").alias("cosine"))
-    )
-    w = W.partitionBy("query_id").orderBy(
-        F.col("cosine").desc(), "neighbor_id"
-    )
-    return (
-        merged.withColumn("rnk", F.row_number().over(w).cast("long"))
-        .filter(F.col("rnk") <= KNN_K)
-    )
+    return topk(max_merge(_read_units(spark, index_path, "edges")), KNN_K)
 
 
 def q_knn_graph_budgeted_from_index(
@@ -723,9 +605,7 @@ def incremental_embedding_dedup(
     replaying the batch is order-stable. Cosines are rounded like
     every similarity operator (6 dp), so the tau comparison is
     deterministic across partitionings."""
-    from pyspark.sql import Window as W
-
-    from .similarity import KNN_CELL_CAP, dot_expr
+    from .similarity import KNN_CELL_CAP
 
     _require(index_path)
     seeds = spark.read.parquet(os.path.join(index_path, "seeds"))
@@ -735,12 +615,7 @@ def incremental_embedding_dedup(
     # the batch's |batch| x sqrt(n) assignment pass per consumer is
     # cheap at batch scale, unlike the corpus-sized passes the
     # checkpointed operators pin
-    q = ivf_assign(new_vecs, seeds=seeds).select(
-        F.col("vec_id").alias("query_id"),
-        F.col("embedding").alias("q_emb"),
-        F.col("v_norm").alias("q_norm"),
-        "cell",
-    )
+    q = query_side(ivf_assign(new_vecs, seeds=seeds), "cell")
     cells = q.select("cell").distinct()
     hist = (
         _read_units(spark, index_path, "assignments", exclude_unit=exclude_unit)
@@ -763,12 +638,8 @@ def incremental_embedding_dedup(
     # visibility (pinned by test: a cell pre-loaded past the cap with
     # low-id history must still classify the second of two identical
     # batch vectors as near_dup).
-    wc = W.partitionBy("cell").orderBy("vec_id")
-    pool = (
-        hist.withColumn("_crn", F.row_number().over(wc))
-        .filter(F.col("_crn") <= KNN_CELL_CAP)
-        .drop("_crn")
-        .unionByName(batch_cand)
+    pool = capped_pool(hist, "cell", "vec_id", KNN_CELL_CAP).unionByName(
+        batch_cand
     )
     cand = pool.select(
         "cell",
@@ -785,11 +656,7 @@ def incremental_embedding_dedup(
         .select(
             "query_id",
             F.struct(
-                F.round(
-                    dot_expr("q_emb", "c_emb")
-                    / (F.col("q_norm") * F.col("c_norm")),
-                    6,
-                ).alias("cosine"),
+                pair_cosine(),
                 (-F.col("cand_id")).alias("neg"),
                 F.col("cand_id").alias("cand_id"),
             ).alias("s"),

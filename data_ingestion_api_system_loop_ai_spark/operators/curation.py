@@ -44,7 +44,7 @@ from pyspark.sql import functions as F
 
 from ..functions.text import sql_tokens, tokenize
 from ..sources.loader import load_table
-from .similarity import RP_DIM, dot_expr, norm_expr
+from .similarity import RP_DIM, dot_expr, exact_mean, norm_expr
 
 OUTLIER_K = 10
 TFIDF_K = 10
@@ -53,23 +53,7 @@ TFIDF_K = 10
 def label_centroids(e: DataFrame) -> DataFrame:
     """(label, centroid) — exact decimal element sums / double division
     (the ivf_centroids idiom, keyed by label)."""
-    return (
-        e.select("label", F.posexplode("embedding").alias("i", "v"))
-        .groupBy("label", "i")
-        .agg(
-            (
-                F.sum(F.col("v").cast("double").cast("decimal(25,12)")).cast("double")
-                / F.count("*")
-            ).alias("cv")
-        )
-        .groupBy("label")
-        .agg(
-            F.transform(
-                F.array_sort(F.collect_list(F.struct("i", "cv"))),
-                lambda s: s["cv"],
-            ).alias("centroid")
-        )
-    )
+    return exact_mean(e, ["label"], "embedding", "centroid")
 
 
 def q_embedding_outliers(spark: SparkSession, sf_dir: str) -> DataFrame:

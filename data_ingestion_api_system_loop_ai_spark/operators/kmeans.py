@@ -36,7 +36,12 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..sources.loader import load_table
-from .similarity import nearest_seeds, norm_expr, systematic_seed_ids
+from .similarity import (
+    ivf_centroids,
+    nearest_seeds,
+    norm_expr,
+    systematic_seed_ids,
+)
 
 KMEANS_K = 16
 KMEANS_ITERS = 4
@@ -67,28 +72,6 @@ def kmeans_assign(e: DataFrame, centroids: DataFrame) -> DataFrame:
         norm_expr("centroid").alias("seed_norm"),
     )
     return nearest_seeds(v, c)
-
-
-def _recompute(e: DataFrame, asg: DataFrame) -> DataFrame:
-    """(cell, centroid) decimal-exact per-cell element means."""
-    return (
-        e.join(asg.select("vec_id", "cell"), "vec_id")
-        .select("cell", F.posexplode("embedding").alias("i", "v"))
-        .groupBy("cell", "i")
-        .agg(
-            (
-                F.sum(F.col("v").cast("double").cast("decimal(25,12)")).cast("double")
-                / F.count("*")
-            ).alias("cv")
-        )
-        .groupBy("cell")
-        .agg(
-            F.transform(
-                F.array_sort(F.collect_list(F.struct("i", "cv"))),
-                lambda s: s["cv"],
-            ).alias("centroid")
-        )
-    )
 
 
 def kmeans_fit(
@@ -142,7 +125,7 @@ def kmeans_fit(
             release_asg()
         asg, release_asg = new_asg, release_new_asg
         new_cent, release_new_cent = local_checkpoint_handle(
-            _recompute(e, asg)
+            ivf_centroids(e.join(asg.select("vec_id", "cell"), "vec_id"))
         )
         release_cent()
         centroids, release_cent = new_cent, release_new_cent
@@ -337,5 +320,5 @@ def q_cluster_quality_from_model(
     e = load_table(spark, sf_dir, "embeddings")
     stored = spark.read.parquet(os.path.join(model_path, "centroids"))
     asg = kmeans_assign(e, stored).localCheckpoint()
-    cent = _recompute(e, asg)
+    cent = ivf_centroids(e.join(asg.select("vec_id", "cell"), "vec_id"))
     return davies_bouldin(asg, cent)

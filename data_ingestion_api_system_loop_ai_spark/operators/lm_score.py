@@ -578,7 +578,6 @@ FROM per_doc
 # ---------------------------------------------------------------------------
 
 CCNET_TILES = 3
-_CCNET_LABELS = {1: "head", 2: "middle", 3: "tail"}
 
 
 def ccnet_buckets(docs: DataFrame) -> DataFrame:

@@ -1366,7 +1366,6 @@ def q_media_features_arrow(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 _RESIZE_BOX = 224
-_FRAME_FPS = 10
 _MAX_SAMPLES = 5
 
 _PIPELINE_SCHEMA = (

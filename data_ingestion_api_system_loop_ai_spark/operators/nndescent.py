@@ -55,10 +55,14 @@ from ..sources.loader import load_table
 from .similarity import (
     KNN_K,
     KNN_SEED_BUDGET,
-    dot_expr,
+    candidate_side,
     ivf_assign,
     knn_graph_seed,
+    merged_topk,
     norm_expr,
+    pair_cosine,
+    query_side,
+    rank_neighbors,
 )
 
 NND_ITERS = 2
@@ -124,16 +128,8 @@ def nn_descent(
     # edges), so the base graph's query count pins the denominator
     n_q = g.select("query_id").distinct().count()
     objective: list[float] = []
-    qa = v.select(
-        F.col("vec_id").alias("query_id"),
-        F.col("embedding").alias("qe"),
-        F.col("v_norm").alias("qn"),
-    )
-    nb = v.select(
-        F.col("vec_id").alias("neighbor_id"),
-        F.col("embedding").alias("ne"),
-        F.col("v_norm").alias("nn"),
-    )
+    qa = query_side(v)
+    nb = candidate_side(v)
     for _ in range(iters):
         fwd = g.select(
             F.col("query_id").alias("u"), F.col("neighbor_id").alias("v"), "cosine"
@@ -176,27 +172,10 @@ def nn_descent(
         scored = (
             cand.join(bcast(qa), "query_id")
             .join(bcast(nb), "neighbor_id")
-            .select(
-                "query_id",
-                "neighbor_id",
-                F.round(
-                    dot_expr("qe", "ne") / (F.col("qn") * F.col("nn")), 6
-                ).alias("cosine"),
-            )
-        )
-        merged = (
-            g.unionByName(scored)
-            .groupBy("query_id", "neighbor_id")
-            .agg(F.max("cosine").alias("cosine"))
-        )
-        wq = W.partitionBy("query_id").orderBy(
-            F.col("cosine").desc(), "neighbor_id"
+            .select("query_id", "neighbor_id", pair_cosine())
         )
         g, release_new = local_checkpoint_handle(
-            merged.withColumn("rnk", F.row_number().over(wq).cast("long"))
-            .filter(F.col("rnk") <= k)
-            .select("query_id", "neighbor_id", "cosine"),
-            eager=False,
+            merged_topk(g.unionByName(scored), k), eager=False
         )
         # LAZY checkpoint + the objective aggregate as the materializing
         # action (r13): the eager form ran one full job for the
@@ -219,8 +198,7 @@ def nn_descent(
     # the vector relation fed only the in-loop scoring joins; the final
     # graph checkpoint (which the returned plan reads) stays persisted
     release_v()
-    wq = W.partitionBy("query_id").orderBy(F.col("cosine").desc(), "neighbor_id")
-    out = g.withColumn("rnk", F.row_number().over(wq).cast("long"))
+    out = rank_neighbors(g)
     if return_release:
         return out, objective, release_g
     return out, objective

@@ -446,14 +446,6 @@ def _wire_responses(parsed: DataFrame) -> DataFrame:
     )
 
 
-def ingest_response_line(spark: SparkSession, line: str) -> tuple[int, str]:
-    """One ``POST /ingest`` body -> (http_status, exact response body),
-    through the engine's own parse/validate/uuid expressions — the
-    live-listener form of ``ingest_responses`` (same columns, one
-    row)."""
-    return ingest_response_lines(spark, [line])[0]
-
-
 def ingest_response_lines(
     spark: SparkSession, lines: list[str]
 ) -> list[tuple[int, str]]:

@@ -124,7 +124,6 @@ FROM {table}
 # test + independent pure-python entropy replay, not a registry slot.
 # ---------------------------------------------------------------------------
 
-SECRET_MIN_LEN = 16
 SECRET_ENTROPY_MIN = 3.5  # bits/char; random base62 of len 16+ is ~3.9+
 # dash LAST in the class (literal on both engines with no backslash —
 # Spark's string-literal escape processing drops unknown backslash

@@ -45,7 +45,7 @@ from pyspark.sql import functions as F
 
 from ..sources.loader import load_table
 from .kmeans import KMEANS_ITERS, KMEANS_K, kmeans_assign, kmeans_fit
-from .similarity import dot_expr, norm_expr
+from .similarity import dot_expr, ivf_centroids, norm_expr
 
 # The paper prunes web-scale corpora at tau ≈ 0.95+ (real embeddings of
 # near-duplicate content). The synthetic test embeddings are near-
@@ -171,13 +171,15 @@ def build_kmeans_model(
     verdicts) BIT-IDENTICALLY, which the direct test pins."""
     import os
 
-    from .kmeans import _recompute, kmeans_seeds
+    from .kmeans import kmeans_seeds
 
     e = load_table(spark, sf_dir, "embeddings")
     cent = kmeans_seeds(e, k).localCheckpoint()
     for _ in range(iters - 1):
         asg = kmeans_assign(e, cent).localCheckpoint()
-        cent = _recompute(e, asg).localCheckpoint()
+        cent = ivf_centroids(
+            e.join(asg.select("vec_id", "cell"), "vec_id")
+        ).localCheckpoint()
     from ..sources import commit_protocol
 
     cent.write.mode("overwrite").parquet(os.path.join(model_path, "centroids"))

@@ -71,7 +71,6 @@ BASELINE.json north-star tier — similarity infrastructure at 100 TB.
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import Window as W
 from pyspark.sql import functions as F
 
 from ..plans.lifecycle import local_checkpoint_handle
@@ -84,10 +83,15 @@ from .similarity import (
     KNN_SEED_BUDGET,
     KNN_SEED_PROBES,
     assign_cells,
-    dot_expr,
+    candidate_side,
+    capped_pool,
     ivf_assign,
+    max_merge,
+    merged_topk,
     nearest_seeds,
     norm_expr,
+    pair_cosine,
+    query_side,
     systematic_seed_ids,
 )
 
@@ -152,12 +156,6 @@ def shard_assign(e: DataFrame, sseeds: DataFrame, S: int) -> DataFrame:
     )
 
 
-def _score():
-    return F.round(
-        dot_expr("q_emb", "c_emb") / (F.col("q_norm") * F.col("c_norm")), 6
-    ).alias("cosine")
-
-
 def within_shard_pairs(
     sasg: DataFrame,
     sseeds: DataFrame,
@@ -176,28 +174,12 @@ def within_shard_pairs(
     shard by construction — bridges connect each shard's cell
     components so the within-shard NND rounds can propagate across
     cells, exactly the measured flat-build role)."""
-    q = sasg.select(
-        F.col("vec_id").alias("query_id"),
-        F.col("embedding").alias("q_emb"),
-        F.col("v_norm").alias("q_norm"),
-        "cell",
-    )
-    wc = W.partitionBy("cell").orderBy("neighbor_id")
-    cand = (
-        sasg.select(
-            F.col("vec_id").alias("neighbor_id"),
-            F.col("embedding").alias("c_emb"),
-            F.col("v_norm").alias("c_norm"),
-            "cell",
-        )
-        .withColumn("_crn", F.row_number().over(wc))
-        .filter(F.col("_crn") <= budget)
-        .drop("_crn")
-    )
+    q = query_side(sasg, "cell")
+    cand = capped_pool(candidate_side(sasg, "cell"), "cell", "neighbor_id", budget)
     pairs = (
         q.join(cand, "cell")
         .filter(F.col("neighbor_id") != F.col("query_id"))
-        .select("query_id", "neighbor_id", _score())
+        .select("query_id", "neighbor_id", pair_cosine())
     )
     if probes > 2:
         raise ValueError("within_shard_pairs supports at most 2 probes")
@@ -212,7 +194,7 @@ def within_shard_pairs(
         pairs = pairs.unionByName(
             q2.join(cand, q2["cell2"] == cand["cell"])
             .filter(F.col("neighbor_id") != F.col("query_id"))
-            .select("query_id", "neighbor_id", _score())
+            .select("query_id", "neighbor_id", pair_cosine())
         )
     # in-shard bridges: member index i = vec_id div S, shard s =
     # vec_id mod S, target index (i·MULT + j·STEP) mod m_s, target id
@@ -222,11 +204,6 @@ def within_shard_pairs(
         sasg.groupBy(_shard("vec_id", S).alias("shard")).agg(
             F.count("*").alias("_m")
         )
-    )
-    nb = sasg.select(
-        F.col("vec_id").alias("neighbor_id"),
-        F.col("embedding").alias("c_emb"),
-        F.col("v_norm").alias("c_norm"),
     )
     bridge_pairs = (
         q.drop("cell")
@@ -250,10 +227,10 @@ def within_shard_pairs(
             ).alias("neighbor_id"),
         )
         .filter(F.col("neighbor_id") != F.col("query_id"))
-        .join(nb, "neighbor_id")
+        .join(candidate_side(sasg), "neighbor_id")
     )
     return pairs.unionByName(
-        bridge_pairs.select("query_id", "neighbor_id", _score())
+        bridge_pairs.select("query_id", "neighbor_id", pair_cosine())
     )
 
 
@@ -274,28 +251,14 @@ def stitch_pairs(
     probe against the global seed relation). These are entry points the
     stitch NND rounds amplify; per-node work is capped at
     ``probes * stitch_budget`` regardless of n or S."""
-    q = gasg.select(
-        F.col("vec_id").alias("query_id"),
-        F.col("embedding").alias("q_emb"),
-        F.col("v_norm").alias("q_norm"),
-        "cell",
-    )
-    wc = W.partitionBy("cell").orderBy("neighbor_id")
-    cand = (
-        gasg.select(
-            F.col("vec_id").alias("neighbor_id"),
-            F.col("embedding").alias("c_emb"),
-            F.col("v_norm").alias("c_norm"),
-            "cell",
-        )
-        .withColumn("_crn", F.row_number().over(wc))
-        .filter(F.col("_crn") <= stitch_budget)
-        .drop("_crn")
+    q = query_side(gasg, "cell")
+    cand = capped_pool(
+        candidate_side(gasg, "cell"), "cell", "neighbor_id", stitch_budget
     )
     pairs = (
         q.join(cand, "cell")
         .filter(_shard("query_id", S) != _shard("neighbor_id", S))
-        .select("query_id", "neighbor_id", _score())
+        .select("query_id", "neighbor_id", pair_cosine())
     )
     if probes > 2:
         raise ValueError("stitch_pairs supports at most 2 probes")
@@ -311,7 +274,7 @@ def stitch_pairs(
         pairs = pairs.unionByName(
             q2.join(cand, q2["cell2"] == cand["cell"])
             .filter(_shard("query_id", S) != _shard("neighbor_id", S))
-            .select("query_id", "neighbor_id", _score())
+            .select("query_id", "neighbor_id", pair_cosine())
         )
     return pairs
 
@@ -346,42 +309,14 @@ def stitch_pairs_banded(
     nodes = sasg.join(F.broadcast(bmap), "cell").select(
         "vec_id", "embedding", "v_norm", "band"
     )
-    q = nodes.select(
-        F.col("vec_id").alias("query_id"),
-        F.col("embedding").alias("q_emb"),
-        F.col("v_norm").alias("q_norm"),
-        "band",
-    )
-    wb = W.partitionBy("band").orderBy("neighbor_id")
-    cand = (
-        nodes.select(
-            F.col("vec_id").alias("neighbor_id"),
-            F.col("embedding").alias("c_emb"),
-            F.col("v_norm").alias("c_norm"),
-            "band",
-        )
-        .withColumn("_crn", F.row_number().over(wb))
-        .filter(F.col("_crn") <= stitch_budget)
-        .drop("_crn")
+    cand = capped_pool(
+        candidate_side(nodes, "band"), "band", "neighbor_id", stitch_budget
     )
     return (
-        q.join(cand, "band")
+        query_side(nodes, "band")
+        .join(cand, "band")
         .filter(_shard("query_id", S) != _shard("neighbor_id", S))
-        .select("query_id", "neighbor_id", _score())
-    )
-
-
-def _topk(pairs: DataFrame, k: int) -> DataFrame:
-    """Max-dedup then the per-query top-k window — the same rounding
-    and (cosine DESC, neighbor_id) tiebreaks as every graph form."""
-    merged = pairs.groupBy("query_id", "neighbor_id").agg(
-        F.max("cosine").alias("cosine")
-    )
-    w = W.partitionBy("query_id").orderBy(F.col("cosine").desc(), "neighbor_id")
-    return (
-        merged.withColumn("rnk", F.row_number().over(w))
-        .filter(F.col("rnk") <= k)
-        .select("query_id", "neighbor_id", "cosine")
+        .select("query_id", "neighbor_id", pair_cosine())
     )
 
 
@@ -438,7 +373,7 @@ def knn_graph_sharded(
     sasg, release_sasg = local_checkpoint_handle(
         shard_assign(e, sseeds, S), eager=False
     )
-    local_seed = _topk(
+    local_seed = merged_topk(
         within_shard_pairs(
             sasg, sseeds, S, budget=budget, probes=probes, bridges=bridges
         ),
@@ -480,7 +415,7 @@ def knn_graph_sharded(
 
         if seeds is None:
             seeds = ivf_seeds(e)
-        stitch = _topk(
+        stitch = merged_topk(
             stitch_pairs_banded(
                 sasg, sseeds, seeds, S, stitch_budget=stitch_budget
             ),
@@ -494,7 +429,7 @@ def knn_graph_sharded(
 
             seeds = ivf_seeds(e)
         gasg_ck, release_gasg = local_checkpoint_handle(gasg, eager=False)
-        stitch = _topk(
+        stitch = merged_topk(
             stitch_pairs(
                 gasg_ck, S, stitch_budget=stitch_budget, seeds=seeds,
                 probes=stitch_probes,
@@ -505,11 +440,7 @@ def knn_graph_sharded(
     # the stitch rounds with its wk best local AND wk best cross-shard
     # candidates — guaranteed cross-shard entry points; the first
     # stitch round's top-wk collapses back to wk
-    merged = (
-        local_graph.unionByName(stitch)
-        .groupBy("query_id", "neighbor_id")
-        .agg(F.max("cosine").alias("cosine"))
-    )
+    merged = max_merge(local_graph.unionByName(stitch))
     wide, _obj = nn_descent(
         e, merged, k=wk, iters=iters_stitch, n_vectors=n
     )
@@ -767,7 +698,7 @@ def sharded_seed_merged(
     S = n_shards_for(n, shard_target)
     sseeds = shard_seeds(e, S).localCheckpoint(eager=False)
     sasg = shard_assign(e, sseeds, S).localCheckpoint(eager=False)
-    local = _topk(
+    local = merged_topk(
         within_shard_pairs(
             sasg, sseeds, S, budget=budget, probes=probes, bridges=bridges
         ),
@@ -778,17 +709,13 @@ def sharded_seed_merged(
     # the checkpoint strips the relation's size statistics and demotes
     # the seed-side broadcast joins inside stitch_pairs to sort-merge,
     # costing more than the 4 duplicate scans it saved
-    stitch = _topk(
+    stitch = merged_topk(
         stitch_pairs(
             gasg, S, stitch_budget, seeds=ivf_seeds(e), probes=2
         ),
         k,
     )
-    return (
-        local.unionByName(stitch)
-        .groupBy("query_id", "neighbor_id")
-        .agg(F.max("cosine").alias("cosine"))
-    )
+    return max_merge(local.unionByName(stitch))
 
 
 # Round-13 rotation (VERDICT r12 #3): the sharded build's seed stage

@@ -27,6 +27,19 @@
 
 Both are oracle-checkable; a vectorized Pandas-UDF variant of the dot
 product lives in ``udfs.py`` for the UDF-surface demo and benchmarking.
+
+Every kNN-family operator generates candidates its own way but shares
+one scoring stage, written once here: ``query_side`` /
+``candidate_side`` (the two halves of a pair join, norms precomputed),
+``pair_cosine`` (the 6-dp rounded cosine), ``capped_pool`` (the
+giant-cell guard), ``topk`` / ``rank_neighbors`` / ``max_merge`` /
+``merged_topk`` (the (cosine DESC, neighbor_id) keep step),
+``exact_mean`` (decimal-exact centroids and codewords),
+``probe_cells`` (IVF multi-probe), ``pq_search`` (PQ ADC shortlist +
+exact refine) and ``code_arrays`` (stored PQ code rows). The seed half
+is ``systematic_seed_ids`` / ``nearest_seeds`` / ``assign_cells``.
+Users: this module, ``ann_index``, ``shardknn``, ``nndescent``,
+``kmeans``, ``semdedup`` and ``curation``.
 """
 
 from __future__ import annotations
@@ -56,6 +69,112 @@ def norm_expr(a: str) -> Column:
 
 def cosine_expr(a: str, b: str) -> Column:
     return dot_expr(a, b) / (norm_expr(a) * norm_expr(b))
+
+
+def _side(df: DataFrame, id_col: str, p: str, extra: tuple[str, ...]) -> DataFrame:
+    # an assignment relation carries its norm; a raw table computes it
+    norm = F.col("v_norm") if "v_norm" in df.columns else norm_expr("embedding")
+    return df.select(
+        F.col("vec_id").alias(id_col),
+        F.col("embedding").alias(f"{p}_emb"),
+        norm.alias(f"{p}_norm"),
+        *extra,
+    )
+
+
+def query_side(df: DataFrame, *extra: str) -> DataFrame:
+    """(query_id, q_emb, q_norm, *extra): the query half of a scored
+    pair join over a (vec_id, embedding[, v_norm]) relation. Norms are
+    taken BEFORE the pair join, so the cosine inside it is one dot
+    product and one divide."""
+    return _side(df, "query_id", "q", extra)
+
+
+def candidate_side(df: DataFrame, *extra: str) -> DataFrame:
+    """(neighbor_id, c_emb, c_norm, *extra): the candidate half."""
+    return _side(df, "neighbor_id", "c", extra)
+
+
+def pair_cosine() -> Column:
+    """``cosine``: the query/candidate cosine rounded to 6 dp, so ranks
+    and thresholds are deterministic across partitionings and engines."""
+    return F.round(
+        dot_expr("q_emb", "c_emb") / (F.col("q_norm") * F.col("c_norm")), 6
+    ).alias("cosine")
+
+
+def capped_pool(df: DataFrame, per: str, order: str, cap: int) -> DataFrame:
+    """The first ``cap`` rows of every ``per`` group by ``order`` — the
+    giant-cell guard on a candidate pool (a sort-based, spillable
+    window), so a dense duplicate cluster cannot make its cell's pair
+    join quadratic."""
+    w = W.partitionBy(per).orderBy(order)
+    return (
+        df.withColumn("_crn", F.row_number().over(w))
+        .filter(F.col("_crn") <= cap)
+        .drop("_crn")
+    )
+
+
+def _by_neighbor_rank():
+    # the one tie order of every similarity result
+    return W.partitionBy("query_id").orderBy(F.col("cosine").desc(), F.col("neighbor_id"))
+
+
+def rank_neighbors(pairs: DataFrame) -> DataFrame:
+    """``pairs`` plus ``rnk`` (long): each query's neighbors numbered by
+    (cosine DESC, neighbor_id)."""
+    return pairs.withColumn("rnk", F.row_number().over(_by_neighbor_rank()).cast("long"))
+
+
+def topk(pairs: DataFrame, k: int) -> DataFrame:
+    """``rank_neighbors`` cut at rank ``k``."""
+    return rank_neighbors(pairs).filter(F.col("rnk") <= k)
+
+
+def max_merge(pairs: DataFrame) -> DataFrame:
+    """(query_id, neighbor_id, cosine): one row per pair, the best
+    cosine kept — a pair drawn by two candidate sources (probes,
+    bridges, graph units) cannot occupy two rank slots."""
+    return pairs.groupBy("query_id", "neighbor_id").agg(
+        F.max("cosine").alias("cosine")
+    )
+
+
+def merged_topk(pairs: DataFrame, k: int) -> DataFrame:
+    """(query_id, neighbor_id, cosine): ``max_merge`` then each query's
+    top ``k`` by (cosine DESC, neighbor_id) — the graph builds' keep
+    step. The rank is dropped, so it stays the window's own int column
+    rather than ``rank_neighbors``' long cast."""
+    return (
+        max_merge(pairs)
+        .withColumn("rnk", F.row_number().over(_by_neighbor_rank()))
+        .filter(F.col("rnk") <= k)
+        .select("query_id", "neighbor_id", "cosine")
+    )
+
+
+def exact_mean(df: DataFrame, keys: list[str], vec: str, out: str) -> DataFrame:
+    """(*keys, out): per-group element-wise means of the array column
+    ``vec`` — decimal(25,12) element sums (order-independent) divided
+    by the count as doubles, so Spark and DuckDB produce identical
+    doubles."""
+    return (
+        df.select(*keys, F.posexplode(vec).alias("i", "v"))
+        .groupBy(*keys, "i")
+        .agg(
+            (
+                F.sum(F.col("v").cast("double").cast("decimal(25,12)")).cast("double")
+                / F.count("*")
+            ).alias("cv")
+        )
+        .groupBy(*keys)
+        .agg(
+            F.transform(
+                F.array_sort(F.collect_list(F.struct("i", "cv"))), lambda s: s["cv"]
+            ).alias(out)
+        )
+    )
 
 
 def systematic_seed_ids(
@@ -155,32 +274,14 @@ def q_similarity_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     divide, not three dot products; identical doubles (same fold order),
     a third of the FLOPs."""
     e = load_table(spark, sf_dir, "embeddings")
-    q = e.filter(F.col("vec_id") % 100 == 0).select(
-        F.col("vec_id").alias("query_id"),
-        F.col("embedding").alias("q_emb"),
-        norm_expr("embedding").alias("q_norm"),
-    )
-    cand = e.select(
-        F.col("vec_id").alias("neighbor_id"),
-        F.col("embedding").alias("c_emb"),
-        norm_expr("embedding").alias("c_norm"),
-    )
+    q = query_side(e.filter(F.col("vec_id") % 100 == 0))
     pairs = (
-        cand.crossJoin(F.broadcast(q))
+        candidate_side(e)
+        .crossJoin(F.broadcast(q))
         .filter(F.col("neighbor_id") != F.col("query_id"))
-        .select(
-            "query_id",
-            "neighbor_id",
-            F.round(
-                dot_expr("q_emb", "c_emb") / (F.col("q_norm") * F.col("c_norm")), 6
-            ).alias("cosine"),
-        )
+        .select("query_id", "neighbor_id", pair_cosine())
     )
-    w = W.partitionBy("query_id").orderBy(F.col("cosine").desc(), F.col("neighbor_id"))
-    return (
-        pairs.withColumn("rnk", F.row_number().over(w).cast("long"))
-        .filter(F.col("rnk") <= TOPK)
-    )
+    return topk(pairs, TOPK)
 
 
 def ivf_seeds(e: DataFrame) -> DataFrame:
@@ -246,21 +347,21 @@ def ivf_centroids(asg: DataFrame) -> DataFrame:
     """(cell, centroid): exact per-cell centroids — decimal element
     sums (order-independent), double division by the count — both
     engines produce identical doubles."""
+    return exact_mean(asg, ["cell"], "embedding", "centroid")
+
+
+def probe_cells(q: DataFrame, cent: DataFrame) -> DataFrame:
+    """(query_id, q_emb, q_norm, cell): IVF multi-probe — each query of
+    ``query_side`` paired with its NPROBE nearest cells by centroid
+    cosine (ties to the smaller cell), against the broadcast
+    centroids."""
+    wp = W.partitionBy("query_id").orderBy(F.col("cent_cos").desc(), F.col("cell"))
     return (
-        asg.select("cell", F.posexplode("embedding").alias("i", "v"))
-        .groupBy("cell", "i")
-        .agg(
-            (
-                F.sum(F.col("v").cast("double").cast("decimal(25,12)")).cast("double")
-                / F.count("*")
-            ).alias("cv")
-        )
-        .groupBy("cell")
-        .agg(
-            F.transform(
-                F.array_sort(F.collect_list(F.struct("i", "cv"))), lambda s: s["cv"]
-            ).alias("centroid")
-        )
+        q.crossJoin(F.broadcast(cent))
+        .withColumn("cent_cos", cosine_expr("q_emb", "centroid"))
+        .withColumn("pr", F.row_number().over(wp))
+        .filter(F.col("pr") <= NPROBE)
+        .select("query_id", "q_emb", "q_norm", "cell")
     )
 
 
@@ -269,42 +370,14 @@ def ivf_probe(e: DataFrame, cent: DataFrame, asg: DataFrame) -> DataFrame:
     from (trained inline or read from a persisted index): each query
     (every 100th vector) probes its NPROBE nearest cells by centroid
     cosine, candidates are an equi-join on the probed cell ids."""
-    q = e.filter(F.col("vec_id") % 100 == 0).select(
-        F.col("vec_id").alias("query_id"),
-        F.col("embedding").alias("q_emb"),
-        norm_expr("embedding").alias("q_norm"),
-    )
-    wp = W.partitionBy("query_id").orderBy(F.col("cent_cos").desc(), F.col("cell"))
-    probes = (
-        q.crossJoin(F.broadcast(cent))
-        .withColumn("cent_cos", cosine_expr("q_emb", "centroid"))
-        .withColumn("pr", F.row_number().over(wp))
-        .filter(F.col("pr") <= NPROBE)
-        .select("query_id", "q_emb", "q_norm", "cell")
-    )
-    cand = asg.select(
-        F.col("vec_id").alias("neighbor_id"),
-        F.col("embedding").alias("c_emb"),
-        F.col("v_norm").alias("c_norm"),
-        "cell",
-    )
+    probes = probe_cells(query_side(e.filter(F.col("vec_id") % 100 == 0)), cent)
     pairs = (
-        cand.join(F.broadcast(probes), "cell")
+        candidate_side(asg, "cell")
+        .join(F.broadcast(probes), "cell")
         .filter(F.col("neighbor_id") != F.col("query_id"))
-        .select(
-            "query_id",
-            "cell",
-            "neighbor_id",
-            F.round(
-                dot_expr("q_emb", "c_emb") / (F.col("q_norm") * F.col("c_norm")), 6
-            ).alias("cosine"),
-        )
+        .select("query_id", "cell", "neighbor_id", pair_cosine())
     )
-    w = W.partitionBy("query_id").orderBy(F.col("cosine").desc(), F.col("neighbor_id"))
-    return (
-        pairs.withColumn("rnk", F.row_number().over(w).cast("long"))
-        .filter(F.col("rnk") <= IVF_TOPK)
-    )
+    return topk(pairs, IVF_TOPK)
 
 
 def q_similarity_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -541,38 +614,16 @@ def q_similarity_rplsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     then exact cosine ranks the (deduplicated) candidates."""
     e = load_table(spark, sf_dir, "embeddings")
     sig = rplsh_signatures(e)
-    q = sig.filter(F.col("vec_id") % 100 == 0).select(
-        F.col("vec_id").alias("query_id"),
-        F.col("embedding").alias("q_emb"),
-        F.col("v_norm").alias("q_norm"),
-        "band",
-        "key",
-    )
-    cand = sig.select(
-        F.col("vec_id").alias("neighbor_id"),
-        F.col("embedding").alias("c_emb"),
-        F.col("v_norm").alias("c_norm"),
-        "band",
-        "key",
-    )
+    q = query_side(sig.filter(F.col("vec_id") % 100 == 0), "band", "key")
     pairs = (
-        cand.join(F.broadcast(q), ["band", "key"])
+        candidate_side(sig, "band", "key")
+        .join(F.broadcast(q), ["band", "key"])
         .filter(F.col("neighbor_id") != F.col("query_id"))
         .select("query_id", "neighbor_id", "q_emb", "q_norm", "c_emb", "c_norm")
         .dropDuplicates(["query_id", "neighbor_id"])
-        .select(
-            "query_id",
-            "neighbor_id",
-            F.round(
-                dot_expr("q_emb", "c_emb") / (F.col("q_norm") * F.col("c_norm")), 6
-            ).alias("cosine"),
-        )
+        .select("query_id", "neighbor_id", pair_cosine())
     )
-    w = W.partitionBy("query_id").orderBy(F.col("cosine").desc(), F.col("neighbor_id"))
-    return (
-        pairs.withColumn("rnk", F.row_number().over(w).cast("long"))
-        .filter(F.col("rnk") <= RP_TOPK)
-    )
+    return topk(pairs, RP_TOPK)
 
 
 # ---------------------------------------------------------------------------
@@ -688,21 +739,7 @@ def pq_codebooks(e: DataFrame, subs: DataFrame | None = None) -> DataFrame:
         )
         .select("m", F.col("b.c").alias("c"), F.col("b.sv").alias("sv"))
     )
-    return (
-        a1.select("m", "c", F.posexplode("sv").alias("i", "v"))
-        .groupBy("m", "c", "i")
-        .agg(
-            (
-                F.sum(F.col("v").cast("double").cast("decimal(25,12)")).cast("double") / F.count("*")
-            ).alias("cv")
-        )
-        .groupBy("m", "c")
-        .agg(
-            F.transform(
-                F.array_sort(F.collect_list(F.struct("i", "cv"))), lambda s: s["cv"]
-            ).alias("cw")
-        )
-    )
+    return exact_mean(a1, ["m", "c"], "sv", "cw")
 
 
 def pq_encode(e: DataFrame, subs: DataFrame | None = None,
@@ -726,47 +763,42 @@ def pq_encode(e: DataFrame, subs: DataFrame | None = None,
     )
 
 
+def code_arrays(codes: DataFrame) -> DataFrame:
+    """(vec_id, code: array<long> length PQ_M) from ``pq_encode`` rows —
+    the stored index form."""
+    return codes.groupBy("vec_id").agg(
+        F.transform(
+            F.array_sort(F.collect_list(F.struct("m", "code"))),
+            lambda s: s["code"],
+        ).alias("code")
+    )
+
+
 def pq_codes_array(e: DataFrame) -> DataFrame:
     """(vec_id, code: array<long> length PQ_M) — the stored index."""
-    return (
-        pq_encode(e)
-        .groupBy("vec_id")
-        .agg(
-            F.transform(
-                F.array_sort(F.collect_list(F.struct("m", "code"))),
-                lambda s: s["code"],
-            ).alias("code")
-        )
-    )
+    return code_arrays(pq_encode(e))
 
 
 PQ_SHORTLIST = 100  # ADC candidates refined exactly per query
 
 
-def q_similarity_pq(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """PQ/ADC cosine top-5, the FAISS IVFPQ+refine shape: queries
-    (every 100th vector) build exact M x K distance tables against the
-    codebooks (tiny, broadcast); the corpus is scanned as CODES ONLY —
-    approximate distance is the decimal-exact sum of M table lookups,
-    so the big side of the shortlist join never touches a raw
-    embedding — and the ADC top-PQ_SHORTLIST per query is then re-ranked
-    with EXACT cosines (a broadcast of R*nq candidate ids back against
-    the vector relation). Shortlist depth R is a constant per query —
-    it scales with k, not with the corpus, so the exact-refine cost at
-    100 TB is unchanged while the scan side shrinks 128x."""
-    e = load_table(spark, sf_dir, "embeddings")
-    subs = pq_subvectors(e)
-    cb = pq_codebooks(e, subs)
-    codes = pq_encode(e, subs, cb)
-    dtable = (
-        subs.filter(F.col("vec_id") % 100 == 0)
-        .join(F.broadcast(cb), "m")
-        .select(
-            F.col("vec_id").alias("query_id"),
-            "m",
-            "c",
-            _l2_expr("sv", "cw").alias("d"),
-        )
+def pq_search(
+    e: DataFrame, qsubs: DataFrame, cb: DataFrame, codes: DataFrame
+) -> DataFrame:
+    """(query_id, neighbor_id, cosine, rnk): the ADC shortlist + exact
+    refine behind both PQ query forms. ``qsubs`` are the queries'
+    ``pq_subvectors`` rows, ``cb`` the codebooks and ``codes`` the
+    corpus' (vec_id, m, code) rows — trained inline or read from the
+    persisted index. Each query's M x K distance table is built against
+    the broadcast codebooks, its approximate distance to a candidate is
+    the decimal-exact sum of M table lookups, and the top PQ_SHORTLIST
+    by (approx_d, neighbor_id) are re-ranked by exact cosine against
+    ``e``."""
+    dtable = qsubs.join(F.broadcast(cb), "m").select(
+        F.col("vec_id").alias("query_id"),
+        "m",
+        "c",
+        _l2_expr("sv", "cw").alias("d"),
     )
     adc = (
         codes.join(
@@ -787,31 +819,31 @@ def q_similarity_pq(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter(F.col("srnk") <= PQ_SHORTLIST)
         .select("query_id", "neighbor_id")
     )
-    qv = e.filter(F.col("vec_id") % 100 == 0).select(
-        F.col("vec_id").alias("query_id"),
-        F.col("embedding").alias("q_emb"),
-        norm_expr("embedding").alias("q_norm"),
-    )
-    cv = e.select(
-        F.col("vec_id").alias("neighbor_id"),
-        F.col("embedding").alias("c_emb"),
-        norm_expr("embedding").alias("c_norm"),
-    )
     refined = (
-        cv.join(F.broadcast(short), "neighbor_id")
-        .join(F.broadcast(qv), "query_id")
-        .select(
-            "query_id",
-            "neighbor_id",
-            F.round(
-                dot_expr("q_emb", "c_emb") / (F.col("q_norm") * F.col("c_norm")), 6
-            ).alias("cosine"),
-        )
+        candidate_side(e)
+        .join(F.broadcast(short), "neighbor_id")
+        .join(F.broadcast(query_side(e.filter(F.col("vec_id") % 100 == 0))), "query_id")
+        .select("query_id", "neighbor_id", pair_cosine())
     )
-    w = W.partitionBy("query_id").orderBy(F.col("cosine").desc(), "neighbor_id")
-    return (
-        refined.withColumn("rnk", F.row_number().over(w).cast("long"))
-        .filter(F.col("rnk") <= PQ_TOPK)
+    return topk(refined, PQ_TOPK)
+
+
+def q_similarity_pq(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """PQ/ADC cosine top-5, the FAISS IVFPQ+refine shape: queries
+    (every 100th vector) build exact M x K distance tables against the
+    codebooks (tiny, broadcast); the corpus is scanned as CODES ONLY —
+    approximate distance is the decimal-exact sum of M table lookups,
+    so the big side of the shortlist join never touches a raw
+    embedding — and the ADC top-PQ_SHORTLIST per query is then re-ranked
+    with EXACT cosines (a broadcast of R*nq candidate ids back against
+    the vector relation). Shortlist depth R is a constant per query —
+    it scales with k, not with the corpus, so the exact-refine cost at
+    100 TB is unchanged while the scan side shrinks 128x."""
+    e = load_table(spark, sf_dir, "embeddings")
+    subs = pq_subvectors(e)
+    cb = pq_codebooks(e, subs)
+    return pq_search(
+        e, subs.filter(F.col("vec_id") % 100 == 0), cb, pq_encode(e, subs, cb)
     )
 
 
@@ -1006,49 +1038,18 @@ def knn_graph(
     # the probe side computes an n*k dot-product against the broadcast
     # centroids and then the per-pair cosines — spread a few-split scan
     # first (no-op at cluster scale)
-    q = spread_small_scan(e, "vec_id").select(
-        F.col("vec_id").alias("query_id"),
-        F.col("embedding").alias("q_emb"),
-        norm_expr("embedding").alias("q_norm"),
-    )
-    wp = W.partitionBy("query_id").orderBy(F.col("cent_cos").desc(), F.col("cell"))
-    probes = (
-        q.crossJoin(F.broadcast(cent))
-        .withColumn("cent_cos", cosine_expr("q_emb", "centroid"))
-        .withColumn("pr", F.row_number().over(wp))
-        .filter(F.col("pr") <= NPROBE)
-        .select("query_id", "q_emb", "q_norm", "cell")
-    )
-    wc = W.partitionBy("cell").orderBy("neighbor_id")
-    cand = (
-        asg.select(
-            F.col("vec_id").alias("neighbor_id"),
-            F.col("embedding").alias("c_emb"),
-            F.col("v_norm").alias("c_norm"),
-            "cell",
-        )
-        .withColumn("_crn", F.row_number().over(wc))
-        .filter(F.col("_crn") <= KNN_CELL_CAP)
-        .drop("_crn")
+    probes = probe_cells(query_side(spread_small_scan(e, "vec_id")), cent)
+    cand = capped_pool(
+        candidate_side(asg, "cell"), "cell", "neighbor_id", KNN_CELL_CAP
     )
     # NOT broadcast: the probe side is corpus-sized here — shuffle hash
     # join on the cell id (AQE may still broadcast at tiny SF)
     pairs = (
         probes.join(cand, "cell")
         .filter(F.col("neighbor_id") != F.col("query_id"))
-        .select(
-            "query_id",
-            "neighbor_id",
-            F.round(
-                dot_expr("q_emb", "c_emb") / (F.col("q_norm") * F.col("c_norm")), 6
-            ).alias("cosine"),
-        )
+        .select("query_id", "neighbor_id", pair_cosine())
     )
-    w = W.partitionBy("query_id").orderBy(F.col("cosine").desc(), F.col("neighbor_id"))
-    return (
-        pairs.withColumn("rnk", F.row_number().over(w).cast("long"))
-        .filter(F.col("rnk") <= k)
-    )
+    return topk(pairs, k)
 
 
 def q_knn_graph(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1134,24 +1135,8 @@ def knn_graph_seed(asg: DataFrame, k: int = KNN_K,
     not persisted twice."""
     if checkpoint:
         asg = asg.localCheckpoint(eager=False)
-    q = asg.select(
-        F.col("vec_id").alias("query_id"),
-        F.col("embedding").alias("q_emb"),
-        F.col("v_norm").alias("q_norm"),
-        "cell",
-    )
-    wc = W.partitionBy("cell").orderBy("neighbor_id")
-    cand = (
-        asg.select(
-            F.col("vec_id").alias("neighbor_id"),
-            F.col("embedding").alias("c_emb"),
-            F.col("v_norm").alias("c_norm"),
-            "cell",
-        )
-        .withColumn("_crn", F.row_number().over(wc))
-        .filter(F.col("_crn") <= budget)
-        .drop("_crn")
-    )
+    q = query_side(asg, "cell")
+    cand = capped_pool(candidate_side(asg, "cell"), "cell", "neighbor_id", budget)
     cell_pairs = q.join(cand, "cell").filter(
         F.col("neighbor_id") != F.col("query_id")
     )
@@ -1193,11 +1178,6 @@ def knn_graph_seed(asg: DataFrame, k: int = KNN_K,
     # by a shuffle join of the n·bridges (query, dst) pairs to the
     # vector relation — linear, no window, no crossJoin
     n_row = F.broadcast(asg.agg(F.count("*").alias("_n")))
-    nb = asg.select(
-        F.col("vec_id").alias("neighbor_id"),
-        F.col("embedding").alias("c_emb"),
-        F.col("v_norm").alias("c_norm"),
-    )
     bridge_pairs = (
         q.drop("cell")
         .crossJoin(n_row)
@@ -1217,34 +1197,25 @@ def knn_graph_seed(asg: DataFrame, k: int = KNN_K,
             ).alias("neighbor_id"),
         )
         .filter(F.col("neighbor_id") != F.col("query_id"))
-        .join(nb, "neighbor_id")
+        .join(candidate_side(asg), "neighbor_id")
     )
-    score = F.round(
-        dot_expr("q_emb", "c_emb") / (F.col("q_norm") * F.col("c_norm")), 6
-    ).alias("cosine")
-    scored = cell_pairs.select("query_id", "neighbor_id", score)
+    scored = cell_pairs.select("query_id", "neighbor_id", pair_cosine())
     if probes >= 2:
         scored = scored.unionByName(
-            probe2_pairs.select("query_id", "neighbor_id", score)
+            probe2_pairs.select("query_id", "neighbor_id", pair_cosine())
         )
     if probes >= 3:
         scored = scored.unionByName(
-            probe3_pairs.select("query_id", "neighbor_id", score)
+            probe3_pairs.select("query_id", "neighbor_id", pair_cosine())
         )
-    pairs = (
-        scored
-        .unionByName(bridge_pairs.select("query_id", "neighbor_id", score))
-        # a bridge or second-probe draw can duplicate a cell pair (same
-        # query, same neighbor, same cosine) — dedup so it can't occupy
-        # two rnk slots in the top-k
-        .groupBy("query_id", "neighbor_id")
-        .agg(F.max("cosine").alias("cosine"))
-    )
-    w = W.partitionBy("query_id").orderBy(F.col("cosine").desc(), F.col("neighbor_id"))
-    return (
-        pairs.withColumn("rnk", F.row_number().over(w).cast("long"))
-        .filter(F.col("rnk") <= k)
-        .select("query_id", "neighbor_id", "cosine")
+    # a bridge or second-probe draw can duplicate a cell pair (same
+    # query, same neighbor, same cosine): merged_topk's max-merge keeps
+    # it out of two rnk slots
+    return merged_topk(
+        scored.unionByName(
+            bridge_pairs.select("query_id", "neighbor_id", pair_cosine())
+        ),
+        k,
     )
 
 

@@ -53,11 +53,6 @@ from pyspark.sql import functions as F
 
 from ..sources.loader import load_table
 
-# names whose parameters are dropped before canonical comparison; the
-# utm_ family is matched by prefix (substr, NOT LIKE — '_' is a LIKE
-# wildcard and the escape syntax differs across engines)
-TRACKING_EXACT = ("fbclid", "gclid", "msclkid")
-
 # URL synthesis — ONE SQL expression string shared verbatim by the
 # Spark plan (F.expr) and the DuckDB oracle. {doc_id} is a column
 # reference. Design: the PAGE IDENTITY (everything the canonical form
@@ -112,7 +107,10 @@ URL_SQL = (
 URL_RE = "^([A-Za-z][A-Za-z0-9+.-]*)://([^/?#]*)([^?#]*)([?][^#]*)?([#].*)?$"
 
 # the parameter-keep predicate, shared verbatim inside both engines'
-# list lambdas ({p} is the lambda variable)
+# list lambdas ({p} is the lambda variable): tracking parameters drop
+# before canonical comparison, the utm_ family by prefix (substr, NOT
+# LIKE — '_' is a LIKE wildcard and the escape syntax differs across
+# engines)
 _KEEP_PRED = (
     "NOT (substr({p}, 1, 4) = 'utm_' OR "
     "regexp_extract({p}, '^([^=]*)', 1) IN ('fbclid','gclid','msclkid'))"

@@ -1,95 +1,22 @@
-"""Fixed schemas for every table and pipeline record.
+"""Pipeline constants shared by the batch and streaming forms, and the
+table list of the test star schema.
 
 The reference keeps shapes implicit (plain JS objects, validated by two
-hand-written checks — reference ``src/controllers/ingestController.js:10-15``);
-here every record type is a declared ``StructType`` so the analyzer, not
-runtime code, enforces shape. See SURVEY.md section 1.3 for the mapping.
+hand-written checks — reference ``src/controllers/ingestController.js:10-15``).
+Here the one record that arrives from outside, the ``POST /ingest`` body,
+has a fixed DDL schema where it is read (``streaming/live.py``
+``REQUEST_WIRE_SCHEMA``, ``sources/wire_source.py`` ``WIRE_SCHEMA``) and
+engine-side validation (``operators/pipeline.py``); the test tables take
+their schemas from their parquet files. See SURVEY.md section 1.3.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import types as T
-
-# --- reference pipeline records (SURVEY.md section 1.1) ---------------------
-
-# IngestionRequest: {ids: int[], priority} + assigned key/timestamp.
-# ids are 1..10^9+7 (reference README.md:36) -> LongType.
-INGEST_REQUEST = T.StructType(
-    [
-        T.StructField("request_id", T.StringType(), False),
-        T.StructField("ids", T.ArrayType(T.LongType()), True),
-        T.StructField("priority", T.StringType(), True),
-        T.StructField("created_at", T.TimestampType(), False),
-    ]
-)
-
-# Batch row (exploded child table of the request's `batches` array,
-# reference src/services/ingestService.js:174-178).
-BATCH = T.StructType(
-    [
-        T.StructField("request_id", T.StringType(), False),
-        T.StructField("batch_id", T.StringType(), False),
-        T.StructField("batch_index", T.IntegerType(), False),
-        T.StructField("ids", T.ArrayType(T.LongType()), False),
-        T.StructField("status", T.StringType(), False),
-    ]
-)
-
-# ProcessedRecord (reference src/services/ingestService.js:47).
-PROCESSED = T.StructType(
-    [
-        T.StructField("id", T.LongType(), False),
-        T.StructField("data", T.StringType(), False),
-    ]
-)
-
-PRIORITIES = ("HIGH", "MEDIUM", "LOW")
 BATCH_SIZE = 3  # reference src/services/ingestService.js:6
 RATE_LIMIT_MS = 5000  # reference src/services/ingestService.js:5
 
-# --- driver test tables (TESTDATA.md / FIXTURES.md group B) -----------------
-
-EVENTS = T.StructType(
-    [
-        T.StructField("event_id", T.LongType(), False),
-        T.StructField("ts", T.TimestampType(), False),
-        T.StructField("user_id", T.LongType(), False),
-        T.StructField("event_type", T.StringType(), False),
-        T.StructField("value", T.DoubleType(), False),
-        T.StructField("props", T.StringType(), True),
-    ]
-)
-
-DOCUMENTS = T.StructType(
-    [
-        T.StructField("doc_id", T.LongType(), False),
-        T.StructField("text", T.StringType(), True),
-        T.StructField("lang", T.StringType(), True),
-        T.StructField("source", T.StringType(), True),
-        T.StructField("n_chars", T.LongType(), True),
-    ]
-)
-
-EMBEDDINGS = T.StructType(
-    [
-        T.StructField("vec_id", T.LongType(), False),
-        T.StructField("embedding", T.ArrayType(T.FloatType()), False),
-        T.StructField("label", T.IntegerType(), True),
-    ]
-)
-
-# Opaque multimodal asset row: payload is an undecoded binary column with
-# typed metadata alongside — decode happens in mapInPandas stages only.
-MEDIA_ASSET = T.StructType(
-    [
-        T.StructField("asset_id", T.LongType(), False),
-        T.StructField("kind", T.StringType(), False),  # image|audio|video
-        T.StructField("payload", T.BinaryType(), True),
-        T.StructField("mime", T.StringType(), True),
-        T.StructField("meta", T.MapType(T.StringType(), T.StringType()), True),
-    ]
-)
-
+# every table of a test-data directory (TESTDATA.md), registered as a
+# temp view by sources/loader.register_views under the same name
 TPCH_TABLES = (
     "region",
     "nation",

@@ -37,8 +37,8 @@ from pyspark.sql.datasource import (
     WriterCommitMessage,
 )
 
-# the POST /ingest body plus capture metadata; matches
-# schemas.REQUEST_WIRE_SCHEMA's field names
+# the POST /ingest body plus capture metadata; matches the field names
+# of streaming/live.py REQUEST_WIRE_SCHEMA
 WIRE_SCHEMA = (
     "request_id string, priority string, created_at_ms long, ids array<int>"
 )

@@ -45,7 +45,7 @@ import uuid
 
 import pandas as pd
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 from pyspark.sql.types import (
@@ -176,6 +176,43 @@ def stream_static_join(events: DataFrame, customers: DataFrame) -> DataFrame:
     return events.join(F.broadcast(dim), "user_id", "left")
 
 
+def _interval_sides(
+    left: DataFrame, right: DataFrame, interval_ms: int | None, delay: str
+) -> tuple[DataFrame, DataFrame, int, Column]:
+    """(l, r, interval_ms, cond): the two watermarked join sides of the
+    stream-stream interval joins and their key + time-range condition.
+    The condition holds only equality and time-range predicates (what
+    the streaming state-constraint extractor understands), widened by
+    1 ms so truncation-boundary pairs survive to each form's exact
+    ms-diff bound."""
+    from ..operators.timeseries import RANGE_JOIN_MS
+
+    def side(df: DataFrame, p: str, event: str) -> DataFrame:
+        return (
+            df.select(
+                F.col("user_id").alias(f"{p}_user"),
+                F.col("event_id").alias(event),
+                F.col("ts").cast("timestamp").alias(f"{p}_ts"),
+            )
+            # per-event ms truncation BEFORE the subtraction, matching
+            # the batch range join (|trunc(a)-trunc(b)| != trunc(|a-b|)
+            # when the sub-ms parts straddle a boundary)
+            .withColumn(f"{p}_ms", F.unix_millis(f"{p}_ts"))
+            .withWatermark(f"{p}_ts", delay)
+        )
+
+    if interval_ms is None:
+        interval_ms = RANGE_JOIN_MS
+    slack = interval_ms + 1
+    cond = (
+        (F.col("l_user") == F.col("r_user"))
+        & (F.col("r_ts") >= F.expr(f"l_ts - INTERVAL {slack} MILLISECOND"))
+        & (F.col("r_ts") <= F.expr(f"l_ts + INTERVAL {slack} MILLISECOND"))
+    )
+    l, r = side(left, "l", "event_a"), side(right, "r", "event_b")
+    return l, r, interval_ms, cond
+
+
 def stream_stream_interval_join(
     left: DataFrame,
     right: DataFrame,
@@ -189,42 +226,9 @@ def stream_stream_interval_join(
     by (user_id, time-range) and sharded across executors exactly like
     the batch equi-join's shuffle. Emits (user_id, event_a, event_b,
     diff_ms) with event_a < event_b, matching the batch output."""
-    l = (
-        left.select(
-            F.col("user_id").alias("l_user"),
-            F.col("event_id").alias("event_a"),
-            F.col("ts").cast("timestamp").alias("l_ts"),
-        )
-        # per-event ms truncation BEFORE the subtraction, matching the
-        # batch range join (|trunc(a)-trunc(b)| != trunc(|a-b|) when the
-        # sub-ms parts straddle a boundary)
-        .withColumn("l_ms", F.unix_millis("l_ts"))
-        .withWatermark("l_ts", delay)
-    )
-    r = (
-        right.select(
-            F.col("user_id").alias("r_user"),
-            F.col("event_id").alias("event_b"),
-            F.col("ts").cast("timestamp").alias("r_ts"),
-        )
-        .withColumn("r_ms", F.unix_millis("r_ts"))
-        .withWatermark("r_ts", delay)
-    )
-    from ..operators.timeseries import RANGE_JOIN_MS
-
-    if interval_ms is None:
-        interval_ms = RANGE_JOIN_MS
-    # only equality + time-range predicates in the join condition (what
-    # the streaming state-constraint extractor understands), widened by
-    # 1 ms so truncation boundary pairs survive to the exact post-filter;
+    l, r, interval_ms, cond = _interval_sides(left, right, interval_ms, delay)
     # pair ordering and the exact ms-diff bound are plain inner-join
     # post-filters
-    slack = interval_ms + 1
-    cond = (
-        (F.col("l_user") == F.col("r_user"))
-        & (F.col("r_ts") >= F.expr(f"l_ts - INTERVAL {slack} MILLISECOND"))
-        & (F.col("r_ts") <= F.expr(f"l_ts + INTERVAL {slack} MILLISECOND"))
-    )
     return (
         l.join(r, cond)
         .filter(F.col("event_a") < F.col("event_b"))
@@ -258,33 +262,9 @@ def stream_stream_interval_join_left(
     them, turning the join back into an inner one. State sizing and
     sharding are identical to the inner form (keyed by user_id +
     time-range, expired by watermark)."""
-    l = (
-        left.select(
-            F.col("user_id").alias("l_user"),
-            F.col("event_id").alias("event_a"),
-            F.col("ts").cast("timestamp").alias("l_ts"),
-        )
-        .withColumn("l_ms", F.unix_millis("l_ts"))
-        .withWatermark("l_ts", delay)
-    )
-    r = (
-        right.select(
-            F.col("user_id").alias("r_user"),
-            F.col("event_id").alias("event_b"),
-            F.col("ts").cast("timestamp").alias("r_ts"),
-        )
-        .withColumn("r_ms", F.unix_millis("r_ts"))
-        .withWatermark("r_ts", delay)
-    )
-    from ..operators.timeseries import RANGE_JOIN_MS
-
-    if interval_ms is None:
-        interval_ms = RANGE_JOIN_MS
-    slack = interval_ms + 1
+    l, r, interval_ms, cond = _interval_sides(left, right, interval_ms, delay)
     cond = (
-        (F.col("l_user") == F.col("r_user"))
-        & (F.col("r_ts") >= F.expr(f"l_ts - INTERVAL {slack} MILLISECOND"))
-        & (F.col("r_ts") <= F.expr(f"l_ts + INTERVAL {slack} MILLISECOND"))
+        cond
         & (F.col("event_a") < F.col("event_b"))
         & (F.abs(F.col("l_ms") - F.col("r_ms")) <= F.lit(interval_ms))
     )
@@ -443,8 +423,6 @@ def bloom_add(bits: bytearray, batch_id: str) -> None:
 
 def bloom_contains(bits: bytes, batch_id: str) -> bool:
     return all(bits[p >> 3] & (1 << (p & 7)) for p in _bloom_hashes(batch_id))
-
-_PRIORITY_RANK = {"HIGH": 1, "MEDIUM": 2, "LOW": 3}
 
 
 def requests_json_stream(spark: SparkSession, path: str) -> DataFrame:

@@ -8,6 +8,7 @@ unexercised."""
 from __future__ import annotations
 
 import os
+import shutil
 
 import pytest
 from pyspark.sql import functions as F
@@ -28,6 +29,25 @@ from data_ingestion_api_system_loop_ai_spark.operators.text_analysis import (
     q_quality_score,
     q_token_count,
 )
+
+
+@pytest.fixture(scope="module")
+def ann_ix(spark, sf_dir, tmp_path_factory):
+    """One persisted ANN index over the test embeddings, built with the
+    default constants. Tests that only probe read it as it is; tests
+    that append, compact, replay or write into it take a copy
+    (``_ann_copy``), so no test sees another's units."""
+    from data_ingestion_api_system_loop_ai_spark.operators import ann_index as ai
+
+    ix = str(tmp_path_factory.mktemp("ann_ix") / "ix")
+    ai.build_ann_index(spark, sf_dir, ix)
+    return ix
+
+
+def _ann_copy(ann_ix: str, tmp_path, name: str) -> str:
+    ix = str(tmp_path / name)
+    shutil.copytree(ann_ix, ix)
+    return ix
 
 
 def test_approx_distinct_within_rsd(spark, sf_dir):
@@ -171,7 +191,7 @@ def test_minhash_banded_survives_giant_dup_cluster(spark):
         assert len(over) == 8 and all(r["bucket_size"] == m for r in over)
 
 
-def test_ann_index_probe_matches_inline(spark, sf_dir, tmp_path):
+def test_ann_index_probe_matches_inline(spark, sf_dir, tmp_path, ann_ix):
     """VERDICT r03 #5: the persisted ANN index (build/probe split) must
     reproduce the inline queries exactly — same IVF neighbors, same PQ
     neighbors — with training removed from the query path; a directory
@@ -182,10 +202,9 @@ def test_ann_index_probe_matches_inline(spark, sf_dir, tmp_path):
         q_similarity_pq,
     )
 
-    ix = str(tmp_path / "ann_ix")
     with pytest.raises(FileNotFoundError):
-        ai.q_similarity_ivf_from_index(spark, sf_dir, ix)
-    ai.build_ann_index(spark, sf_dir, ix)
+        ai.q_similarity_ivf_from_index(spark, sf_dir, str(tmp_path / "ann_ix"))
+    ix = ann_ix
 
     inline_ivf = sorted(map(tuple, q_similarity_ivf(spark, sf_dir).collect()))
     from_ix_ivf = sorted(
@@ -200,7 +219,9 @@ def test_ann_index_probe_matches_inline(spark, sf_dir, tmp_path):
     assert inline_pq == from_ix_pq and len(inline_pq) > 0
 
 
-def test_ann_index_append_assigns_to_frozen_cells(spark, sf_dir, tmp_path):
+def test_ann_index_append_assigns_to_frozen_cells(
+    spark, sf_dir, tmp_path, ann_ix
+):
     """Appending to a built index assigns new vectors against the
     FROZEN quantizer: a copy of an existing vector lands in that
     vector's cell, and its PQ code row appears with all M codes —
@@ -211,8 +232,7 @@ def test_ann_index_append_assigns_to_frozen_cells(spark, sf_dir, tmp_path):
     from data_ingestion_api_system_loop_ai_spark.operators.similarity import PQ_M
     from data_ingestion_api_system_loop_ai_spark.sources.loader import load_table
 
-    ix = str(tmp_path / "ann_ix2")
-    ai.build_ann_index(spark, sf_dir, ix)
+    ix = _ann_copy(ann_ix, tmp_path, "ann_ix2")
     e = load_table(spark, sf_dir, "embeddings")
     src = e.orderBy("vec_id").limit(2).collect()
     new_vecs = spark.createDataFrame(
@@ -2280,7 +2300,7 @@ def test_hist_quantiles_oracle_merge_and_bracket(spark, sf_dir):
         assert est[q]["lo_cents"] <= exact <= est[q]["hi_cents"]
 
 
-def test_knn_graph_oracle_exact_and_index_probe(spark, sf_dir, tmp_path):
+def test_knn_graph_oracle_exact_and_index_probe(spark, sf_dir, ann_ix):
     """Corpus-wide kNN graph: (1) DuckDB parity of the inline form
     (cells, exact-decimal centroids, multi-probe, top-k — the whole
     pipeline); (2) probing the persisted ANN index returns the
@@ -2304,8 +2324,7 @@ def test_knn_graph_oracle_exact_and_index_probe(spark, sf_dir, tmp_path):
     finally:
         con.close()
 
-    ix = str(tmp_path / "knn_ix")
-    ai.build_ann_index(spark, sf_dir, ix)
+    ix = ann_ix
     inline = sorted(map(tuple, q_knn_graph(spark, sf_dir).collect()))
     from_ix = sorted(
         map(tuple, ai.q_knn_graph_from_index(spark, sf_dir, ix).collect())
@@ -3006,7 +3025,7 @@ def test_lm2_score_oracle_exact_and_orders_fluency(spark, sf_dir):
     assert got[100]["mean_surprisal2"] < got[101]["mean_surprisal2"]
 
 
-def test_embedding_clusters_from_index_matches_inline(spark, sf_dir, tmp_path):
+def test_embedding_clusters_from_index_matches_inline(spark, sf_dir, ann_ix):
     """The persisted-index form of the semantic clusters returns the
     IDENTICAL labeling to the inline fit (same frozen edges, same
     component loop)."""
@@ -3015,8 +3034,7 @@ def test_embedding_clusters_from_index_matches_inline(spark, sf_dir, tmp_path):
         q_embedding_clusters,
     )
 
-    ix = str(tmp_path / "cl_ix")
-    ai.build_ann_index(spark, sf_dir, ix)
+    ix = ann_ix
     inline = sorted(map(tuple, q_embedding_clusters(spark, sf_dir).collect()))
     from_ix = sorted(
         map(
@@ -5715,21 +5733,17 @@ def test_pagerank_deterministic_and_replayed(spark, sf_dir):
         assert abs(rank[v] - m1[v]) < 1e-9, (v, rank[v], m1[v])
 
 
-def test_pagerank_from_index_matches_inline(spark, sf_dir, tmp_path):
+def test_pagerank_from_index_matches_inline(spark, sf_dir, ann_ix):
     """q_pagerank_from_index probes the FROZEN ANN index (no graph
     build in the query path) and — because the from-index graph is
     pinned identical to the inline build and the rank folds are
     bit-deterministic — returns EXACTLY the inline q_pagerank rows."""
-    from data_ingestion_api_system_loop_ai_spark.operators.ann_index import (
-        build_ann_index,
-    )
     from data_ingestion_api_system_loop_ai_spark.operators.pagerank import (
         q_pagerank,
         q_pagerank_from_index,
     )
 
-    ix = str(tmp_path / "ix")
-    build_ann_index(spark, sf_dir, ix)
+    ix = ann_ix
     inline = {
         (r["node"], r["rank"], r["rnk"])
         for r in q_pagerank(spark, sf_dir).collect()
@@ -5746,7 +5760,7 @@ def test_pagerank_from_index_matches_inline(spark, sf_dir, tmp_path):
 
 
 def test_knn_graph_budgeted_from_index_reads_stored_edges(
-    spark, sf_dir, tmp_path
+    spark, sf_dir, ann_ix
 ):
     """The from-index budgeted graph (a) returns rows pinned IDENTICAL
     to the inline build and (b) runs ZERO graph-build work in the
@@ -5758,8 +5772,7 @@ def test_knn_graph_budgeted_from_index_reads_stored_edges(
         q_knn_graph_budgeted,
     )
 
-    ix = str(tmp_path / "edge_ix")
-    ai.build_ann_index(spark, sf_dir, ix)
+    ix = ann_ix
     inline = sorted(
         map(tuple, q_knn_graph_budgeted(spark, sf_dir).collect())
     )
@@ -5771,7 +5784,7 @@ def test_knn_graph_budgeted_from_index_reads_stored_edges(
 
 
 def test_ann_append_extends_stored_edges_seed_quality(
-    spark, sf_dir, tmp_path
+    spark, sf_dir, tmp_path, ann_ix
 ):
     """Appending exact copies of existing vectors: the new nodes get
     neighbor lists from the frozen-quantizer budgeted probe (their
@@ -5784,8 +5797,7 @@ def test_ann_append_extends_stored_edges_seed_quality(
     )
     from data_ingestion_api_system_loop_ai_spark.sources.loader import load_table
 
-    ix = str(tmp_path / "edge_append_ix")
-    ai.build_ann_index(spark, sf_dir, ix)
+    ix = _ann_copy(ann_ix, tmp_path, "edge_append_ix")
     before = {
         (r["query_id"], r["neighbor_id"]): r["cosine"]
         for r in ai.read_knn_edges(spark, ix).collect()
@@ -5824,17 +5836,15 @@ def test_ann_append_extends_stored_edges_seed_quality(
                 assert r["cosine"] == before[(q, r["neighbor_id"])]
 
 
-def test_ann_torn_edges_unit_is_invisible(spark, sf_dir, tmp_path):
+def test_ann_torn_edges_unit_is_invisible(spark, tmp_path, ann_ix):
     """A crash after the edges write but before the unit marker leaves
     the graph readers on the pre-append state (the marker gates all
     three unit tables together)."""
     import os as _os
 
     from data_ingestion_api_system_loop_ai_spark.operators import ann_index as ai
-    from data_ingestion_api_system_loop_ai_spark.sources.loader import load_table
 
-    ix = str(tmp_path / "edge_torn_ix")
-    ai.build_ann_index(spark, sf_dir, ix)
+    ix = _ann_copy(ann_ix, tmp_path, "edge_torn_ix")
     before = sorted(map(tuple, ai.read_knn_edges(spark, ix).collect()))
     # hand-write an UNCOMMITTED edges unit (the torn half of an append)
     spark.createDataFrame(
@@ -6003,7 +6013,7 @@ def test_seed_params_rule_pins_measured_anchors():
         prev_b = b
 
 
-def test_incremental_embedding_dedup_cycle(spark, sf_dir, tmp_path):
+def test_incremental_embedding_dedup_cycle(spark, sf_dir, tmp_path, ann_ix):
     """Day-2 SEMANTIC dedup (the embedding twin of incremental_dedup /
     ingest_url_batch): exact copies of stored vectors classify as
     near_dup of their originals at cosine 1.0, a fresh vector is kept,
@@ -6016,8 +6026,7 @@ def test_incremental_embedding_dedup_cycle(spark, sf_dir, tmp_path):
     from data_ingestion_api_system_loop_ai_spark.operators import ann_index as ai
     from data_ingestion_api_system_loop_ai_spark.sources.loader import load_table
 
-    ix = str(tmp_path / "sem_ix")
-    ai.build_ann_index(spark, sf_dir, ix)
+    ix = _ann_copy(ann_ix, tmp_path, "sem_ix")
     src = (
         load_table(spark, sf_dir, "embeddings")
         .orderBy("vec_id")
@@ -6093,7 +6102,7 @@ def test_incremental_embedding_dedup_cycle(spark, sf_dir, tmp_path):
 
 
 def test_incremental_embedding_dedup_batch_survives_hot_cell_cap(
-    spark, sf_dir, tmp_path, monkeypatch
+    spark, ann_ix, monkeypatch
 ):
     """VERDICT r11 observation #1 pinned: a cell whose history already
     holds >= KNN_CELL_CAP members with smaller vec_ids must NOT evict
@@ -6106,8 +6115,7 @@ def test_incremental_embedding_dedup_batch_survives_hot_cell_cap(
     from data_ingestion_api_system_loop_ai_spark.operators import ann_index as ai
     from data_ingestion_api_system_loop_ai_spark.operators import similarity as sim
 
-    ix = str(tmp_path / "hot_ix")
-    ai.build_ann_index(spark, sf_dir, ix)
+    ix = ann_ix
     # shrink the hub-guard cap so sf0.001's ~22-member cells are "hot"
     monkeypatch.setattr(sim, "KNN_CELL_CAP", 4)
     dim = len(
@@ -6139,7 +6147,9 @@ def test_incremental_embedding_dedup_batch_survives_hot_cell_cap(
     assert out[960101]["cosine"] == 1.0
 
 
-def test_ann_append_replay_rewrites_identical_edges(spark, sf_dir, tmp_path):
+def test_ann_append_replay_rewrites_identical_edges(
+    spark, sf_dir, tmp_path, ann_ix
+):
     """Self-review r11: a post-marker replay of append_ann_index must
     rewrite the (already visible) edges unit with IDENTICAL content —
     the pool excludes the unit's own committed rows, so the replayed
@@ -6149,8 +6159,7 @@ def test_ann_append_replay_rewrites_identical_edges(spark, sf_dir, tmp_path):
     from data_ingestion_api_system_loop_ai_spark.operators import ann_index as ai
     from data_ingestion_api_system_loop_ai_spark.sources.loader import load_table
 
-    ix = str(tmp_path / "replay_ix")
-    ai.build_ann_index(spark, sf_dir, ix)
+    ix = _ann_copy(ann_ix, tmp_path, "replay_ix")
     src = (
         load_table(spark, sf_dir, "embeddings")
         .orderBy("vec_id")

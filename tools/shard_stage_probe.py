@@ -67,6 +67,8 @@ def main() -> int:
         KNN_K,
         KNN_SEED_BUDGET,
         ivf_seeds,
+        max_merge,
+        merged_topk,
     )
     from data_ingestion_api_system_loop_ai_spark.plans.lifecycle import (
         local_checkpoint_handle,
@@ -122,7 +124,7 @@ def main() -> int:
     # ---- stage 2: within-shard seed pairs -> top-wk (eager barrier)
     t0 = time.monotonic()
     local_seed, rel_lseed = local_checkpoint_handle(
-        sk._topk(sk.within_shard_pairs(sasg, sseeds, S), wk)
+        merged_topk(sk.within_shard_pairs(sasg, sseeds, S), wk)
     )
     stages["local_seed"] = round(time.monotonic() - t0, 1)
 
@@ -142,7 +144,7 @@ def main() -> int:
     t0 = time.monotonic()
     gseeds, rel_gs = local_checkpoint_handle(ivf_seeds(e))
     stitch, rel_stitch = local_checkpoint_handle(
-        sk._topk(
+        merged_topk(
             sk.stitch_pairs_banded(sasg, sseeds, gseeds, S, stitch_budget=sb),
             wk,
         )
@@ -152,9 +154,7 @@ def main() -> int:
     # ---- stage 5: merge (eager barrier)
     t0 = time.monotonic()
     merged, rel_merged = local_checkpoint_handle(
-        local_graph.unionByName(stitch)
-        .groupBy("query_id", "neighbor_id")
-        .agg(F.max("cosine").alias("cosine"))
+        max_merge(local_graph.unionByName(stitch))
     )
     stages["merge"] = round(time.monotonic() - t0, 1)
     rel_lg()
