@@ -5,6 +5,7 @@ has an exact DuckDB twin so operators built from these are oracle-checkable:
 
 - tokenize:      split on [^a-z0-9]+ after lowercasing, drop empties
 - shingles_k:    word k-grams, distinct set
+- shingle_set:   shingles_k over tokenize, tokenized once per row
 - token_hash:    leading md5 hex chars -> unsigned int (engine-portable
                  stand-in for xxhash64 etc., which differ across engines);
                  default 15 hex chars = 60 bits, the widest that stays
@@ -48,6 +49,19 @@ def shingles_k(tokens: Column, k: int) -> Column:
             F.transform(F.sequence(F.lit(1), F.size(tokens) - k + 1), joined)
         ),
     ).otherwise(F.array().cast("array<string>"))
+
+
+def shingle_set(text: Column, k: int) -> Column:
+    """The distinct word k-gram array of a text column, tokenized ONCE
+    per row: the tokens are LET-BOUND as a lambda variable
+    (``element_at(transform(array(tokenize(text)), ts -> shingles_k(ts,
+    k)), 1)``). Passing ``tokenize(text)`` straight into ``shingles_k``
+    lets CollapseProject inline it into every element reference inside
+    the shingle lambda, re-tokenizing once per position — HOF lambdas
+    sit outside codegen's subexpression elimination."""
+    return F.element_at(
+        F.transform(F.array(tokenize(text)), lambda ts: shingles_k(ts, k)), 1
+    )
 
 
 # SimHash width: 15 md5 hex chars = 60 bits. Wide enough that pigeonhole

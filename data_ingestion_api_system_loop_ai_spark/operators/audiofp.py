@@ -60,9 +60,13 @@ from typing import Iterator
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 
-from .phash import _dct_matrix, phash_near_pairs
+from .phash import (
+    _asset_id_scan,
+    _dct_matrix,
+    fingerprint_batches,
+    media_dedup_verdict,
+)
 
 AFP_SR = 8000          # fixture sample rate (Hz)
 AFP_FRAME = 512        # frame length (samples)
@@ -240,85 +244,20 @@ def afp_payload(doc_id: int) -> bytes:
     return p
 
 
-def _synth_batch(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-    for pdf in batches:
-        yield pd.DataFrame(
-            {
-                "asset_id": pdf["doc_id"].values,
-                "payload": [afp_payload(int(d)) for d in pdf["doc_id"]],
-            }
-        )
-
-
-def _fp_batch(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-    for pdf in batches:
-        ids, fps, errs = [], [], []
-        for aid, payload in zip(pdf["asset_id"], pdf["payload"]):
-            ids.append(int(aid))
-            try:
-                fps.append(afp64(decode_clip_wav(bytes(payload))))
-                errs.append(None)
-            except (ValueError, struct.error) as exc:
-                # struct.error: a truncation landing INSIDE a chunk
-                # header (the r9 multimodal lesson — torn bytes must
-                # become error rows, never a dead executor task)
-                fps.append(None)
-                errs.append(str(exc))
-        yield pd.DataFrame(
-            {
-                "asset_id": pd.array(ids, dtype="int64"),
-                "afp": pd.array(fps, dtype="Int64"),
-                "error": pd.array(errs, dtype="string"),
-            }
-        )
-
-
 def _synth_fp_batch(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-    """Fused synth -> decode -> fingerprint (r13, guide §4.1): the
-    two-stage form shipped every WAV payload Python -> JVM -> Python
-    through two Arrow boundaries just to hand it back to the next
-    mapInPandas; fusing keeps the payload inside one Python worker and
-    each clip leaves as one 8-byte row. Fingerprints are identical by
-    construction (same ``afp_payload`` bytes through the same
-    ``decode_clip_wav``/``afp64``); ``afp_assets`` remains the payload
-    relation for byte-level consumers/tests."""
-    for pdf in batches:
-        ids, fps, errs = [], [], []
-        for d in pdf["doc_id"]:
-            ids.append(int(d))
-            try:
-                fps.append(afp64(decode_clip_wav(afp_payload(int(d)))))
-                errs.append(None)
-            except (ValueError, struct.error) as exc:
-                fps.append(None)
-                errs.append(str(exc))
-        yield pd.DataFrame(
-            {
-                "asset_id": pd.array(ids, dtype="int64"),
-                "afp": pd.array(fps, dtype="Int64"),
-                "error": pd.array(errs, dtype="string"),
-            }
-        )
-
-
-def afp_assets(spark: SparkSession, sf_dir: str) -> DataFrame:
-    # one shared asset-id universe with the fused fingerprint relation
-    # (phash._asset_id_scan — ADVICE r13 #4); CPU-heavy small scan:
-    # same spread discipline as B120
-    from .phash import _asset_id_scan
-
-    return _asset_id_scan(spark, sf_dir).mapInPandas(
-        _synth_batch, "asset_id long, payload binary"
+    """``phash.fingerprint_batches`` over ``afp_payload`` bytes, decoded
+    by ``decode_clip_wav`` and fingerprinted by ``afp64``."""
+    return fingerprint_batches(
+        batches, "afp", lambda d: afp64(decode_clip_wav(afp_payload(d)))
     )
 
 
 def afp_fingerprints(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(asset_id, afp, error): synth + decode + fingerprint in ONE
     narrow Arrow stage — each clip leaves as one 8-byte row and the
-    payload bytes never cross the Python/JVM boundary. Derives its
-    asset-id universe from the same scan as ``afp_assets``."""
-    from .phash import _asset_id_scan
-
+    payload bytes never cross the Python/JVM boundary. The asset-id
+    universe is ``phash._asset_id_scan``, shared by every media family
+    (CPU-heavy small scan: the B120 spread discipline)."""
     return _asset_id_scan(spark, sf_dir).mapInPandas(
         _synth_fp_batch, "asset_id long, afp long, error string"
     )
@@ -326,72 +265,14 @@ def afp_fingerprints(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def q_audio_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(asset_id, afp, content_id, near_id, hamming_to_near, error):
-    the per-clip fingerprint-dedup verdict — ``content_id`` = smallest
-    clip sharing the exact fingerprint, ``near_id`` = smallest content
-    id within Hamming <= 3, one hop, self included (transitive closure
-    is ``connected_components``' job, as for every dedup family).
-    Torn payloads surface as error rows. (Unregistered,
-    NON-SQL-EXPRESSIBLE — payload bytes never exist in SQL; direct
-    tests replay every fingerprint and brute-force every pair.)"""
-    # same four-consumer checkpoint shape as q_phash_dedup
-    fps = afp_fingerprints(spark, sf_dir).localCheckpoint()
-    good = fps.filter(F.col("afp").isNotNull())
-    content = good.groupBy("afp").agg(F.min("asset_id").alias("content_id"))
-    pairs = phash_near_pairs(good, max_hamming=AFP_MAX_HAMMING, col="afp")
-    edges = (
-        pairs.select(
-            F.col("afp_a").alias("afp"), F.col("afp_b").alias("other"),
-            "hamming",
-        )
-        .unionByName(
-            pairs.select(
-                F.col("afp_b").alias("afp"), F.col("afp_a").alias("other"),
-                "hamming",
-            )
-        )
-        .join(
-            content.select(
-                F.col("afp").alias("other"),
-                F.col("content_id").alias("other_content"),
-            ),
-            "other",
-        )
-        .select("afp", "other_content", "hamming")
-        .unionByName(
-            content.select(
-                "afp",
-                F.col("content_id").alias("other_content"),
-                F.lit(0).alias("hamming"),
-            )
-        )
+    the per-clip fingerprint-dedup verdict (``phash.media_dedup_verdict``
+    — the same shape as q_phash_dedup). Torn payloads surface as error
+    rows. (Unregistered, NON-SQL-EXPRESSIBLE — payload bytes never
+    exist in SQL; direct tests replay every fingerprint and
+    brute-force every pair.)"""
+    return media_dedup_verdict(
+        afp_fingerprints(spark, sf_dir), "afp", AFP_MAX_HAMMING
     )
-    near = edges.groupBy("afp").agg(
-        F.min("other_content").alias("near_id"),
-        F.min(F.struct("other_content", "hamming"))["hamming"].alias(
-            "hamming_to_near"
-        ),
-    )
-    verdict = (
-        good.join(content, "afp")
-        .join(near, "afp")
-        .select(
-            "asset_id",
-            "afp",
-            "content_id",
-            "near_id",
-            F.col("hamming_to_near").cast("int").alias("hamming_to_near"),
-            F.lit(None).cast("string").alias("error"),
-        )
-    )
-    errors = fps.filter(F.col("afp").isNull()).select(
-        "asset_id",
-        F.lit(None).cast("long").alias("afp"),
-        F.lit(None).cast("long").alias("content_id"),
-        F.lit(None).cast("long").alias("near_id"),
-        F.lit(None).cast("int").alias("hamming_to_near"),
-        "error",
-    )
-    return verdict.unionByName(errors)
 
 
 UNREGISTERED_AUDIOFP_QUERIES = {"q_audio_dedup": q_audio_dedup}

@@ -7,7 +7,7 @@ one long n-gram with an eval document leaks the benchmark into the
 weights. This module computes that overlap as a DataFrame join:
 
 - shingle both sides into distinct word ``NGRAM_K``-grams (the shared
-  ``shingles_k`` builder used by the dedup family);
+  ``shingle_set`` builder used by the dedup family);
 - inverted-index equi-join training shingles against eval shingles;
 - per training doc: how many distinct n-grams collide, how many eval
   docs are hit, the collision fraction, and the drop verdict.
@@ -33,7 +33,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..functions.text import shingles_k, sql_tokens, tokenize
+from ..functions.text import shingle_set, sql_tokens, tokenize
 from ..sources.loader import load_table
 
 NGRAM_K = 4  # production: 13 (natural-text n-gram entropy is far higher)
@@ -48,19 +48,6 @@ EVAL_MOD, EVAL_REM = 20, 7
 # benched 37 s at sf0.1 on the tiny-vocab synthetic corpus).
 EVAL_DF_CUTOFF_MIN = 20
 EVAL_DF_CUTOFF_FRAC = 0.02
-
-
-def _shingle_arr(text_col: str, k: int):
-    """Let-bound distinct k-gram array (the _shingle_sets idiom,
-    operators/dedup.py:234): ``ts`` is a lambda variable, so tokenize
-    runs once per row instead of once per element_at inside the
-    shingle lambda."""
-    return F.element_at(
-        F.transform(
-            F.array(tokenize(F.col(text_col))), lambda ts: shingles_k(ts, k)
-        ),
-        1,
-    )
 
 
 def contamination_report(
@@ -87,11 +74,11 @@ def contamination_report(
     """
     t_sh = train.select(
         F.col(key_col).alias("doc_id"),
-        F.explode(_shingle_arr(text_col, k)).alias("s"),
+        F.explode(shingle_set(F.col(text_col), k)).alias("s"),
     )
     e_sh = eval_docs.select(
         F.col(key_col).alias("eval_id"),
-        F.explode(_shingle_arr(text_col, k)).alias("s"),
+        F.explode(shingle_set(F.col(text_col), k)).alias("s"),
     )
     ev_stats = e_sh.agg(F.countDistinct("eval_id").alias("n_eval"))
     cutoff = F.greatest(
@@ -119,7 +106,7 @@ def contamination_report(
     )
     sizes = train.select(
         F.col(key_col).alias("doc_id"),
-        F.size(_shingle_arr(text_col, k)).cast("long").alias("n_shingles"),
+        F.size(shingle_set(F.col(text_col), k)).cast("long").alias("n_shingles"),
     )
     return sizes.join(F.broadcast(hits), "doc_id", "left").select(
         "doc_id",

@@ -15,16 +15,34 @@ is MinHash-LSH (q_dedup_minhash_lsh) where the join key is a (band,
 bucket-hash) with bounded posting lists. Embedding near-dup pairs only
 within a coarse bucket (here the ``label`` cell) — the IVF trick — so
 the pair scan is per-cell quadratic, not global.
+
+The text near-dup stages live here once, and their callers share them:
+
+- ``functions.text.shingle_set`` — the let-bound shingle array, used
+  by ``_shingle_sets``, ``incremental_dedup._sigs`` and
+  ``contamination.contamination_report``;
+- ``minhash_digests`` / ``minhash_minima`` / ``lsh_band_keys`` — the
+  MinHash signature and its LSH band keys, used by ``_banded_keys``
+  (and through it ``q_dedup_minhash_banded`` and
+  ``contamination.q_decontaminate_fuzzy``) and by
+  ``incremental_dedup._sigs`` / ``_band_rows``;
+- ``_posting_pairs`` — the DF-cut posting-list pair counts of
+  ``q_dedup_near`` and ``q_dedup_containment``;
+- ``_docs_pairs`` — the in-array pair expansion of those two and of
+  ``q_dedup_minhash_banded``;
+- ``_cand_docs`` — the candidate-doc set of ``q_dedup_minhash_banded``
+  and ``q_dedup_snm``.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import Window as W
 from pyspark.sql import functions as F
 
 from ..functions.text import (
     SIMHASH_BITS,
+    shingle_set,
     shingles_k,
     sql_simhash_cte,
     sql_tokens,
@@ -72,21 +90,31 @@ def _shingles(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def q_dedup_near(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """B14 — exact n-gram Jaccard near-dup via inverted-index posting
-    lists: one shuffle groups shingles into per-shingle doc sets
-    (``collect_set`` deduplicates (doc, shingle) for free), hot shingles
-    (document frequency above ``max(DF_CUTOFF_MIN, DF_CUTOFF_FRAC *
-    corpus)``) are dropped — boilerplate n-grams carry no similarity
-    signal and their posting lists are the pattern's one skew risk —
-    then candidate pairs are generated INSIDE each surviving
-    posting-list array (no self-join of the raw shingle relation), and
-    ``|A∩B| / (|A|+|B|-|A∩B|)`` is computed over the filtered shingle
-    space. Per-doc set sizes come from the filtered postings (so
-    numerator and denominator agree) and broadcast into the pair
-    aggregation. Threshold 0.5 on 5-shingles. The DF cutoff is mirrored
-    exactly in the DuckDB oracle: the production skew guard is itself
-    under the hash gate."""
+def _docs_pairs() -> Column:
+    """Every (doc_a, doc_b) struct with doc_a < doc_b inside the sorted
+    ``docs`` array — element i pairs with the elements after it: the
+    in-array pair expansion, no self-join of the exploded relation."""
+    return F.flatten(
+        F.transform(
+            "docs",
+            lambda x, i: F.transform(
+                F.slice(F.col("docs"), i + 2, F.size("docs")),
+                lambda y: F.struct(x.alias("doc_a"), y.alias("doc_b")),
+            ),
+        )
+    )
+
+
+def _posting_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """(doc_b, doc_a, common, n_a, n_b) for every doc pair sharing a
+    shingle of the FILTERED shingle space — the inverted-index stage of
+    q_dedup_near and q_dedup_containment. One shuffle groups shingles
+    into per-shingle doc sets (``collect_set`` deduplicates (doc,
+    shingle) for free), hot shingles (document frequency above
+    ``max(DF_CUTOFF_MIN, DF_CUTOFF_FRAC * corpus)``) are dropped, pairs
+    come from INSIDE each surviving posting-list array, and per-doc
+    set sizes come from the filtered postings (so numerator and
+    denominator agree)."""
     sh = _shingles(spark, sf_dir)
     stats = sh.agg(F.countDistinct("doc_id").alias("n_docs"))
     cutoff = F.greatest(
@@ -105,18 +133,9 @@ def q_dedup_near(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("doc_id")
         .agg(F.count("*").alias("n"))
     )
-    pair_arr = F.flatten(
-        F.transform(
-            "docs",
-            lambda x, i: F.transform(
-                F.slice(F.col("docs"), i + 2, F.size("docs")),
-                lambda y: F.struct(x.alias("doc_a"), y.alias("doc_b")),
-            ),
-        )
-    )
     pairs = (
         postings.filter(F.size("docs") >= 2)
-        .select(F.explode(pair_arr).alias("p"))
+        .select(F.explode(_docs_pairs()).alias("p"))
         .groupBy(F.col("p.doc_a").alias("doc_a"), F.col("p.doc_b").alias("doc_b"))
         .agg(F.count("*").alias("common"))
     )
@@ -124,9 +143,26 @@ def q_dedup_near(spark: SparkSession, sf_dir: str) -> DataFrame:
     sb = sizes.select(F.col("doc_id").alias("doc_b"), F.col("n").alias("n_b"))
     # size joins left unhinted: AQE broadcasts them while `sizes` fits
     # (one row per doc) and falls back to shuffle joins beyond that
+    return pairs.join(sa, "doc_a").join(sb, "doc_b")
+
+
+def q_dedup_near(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """B14 — exact n-gram Jaccard near-dup via inverted-index posting
+    lists: one shuffle groups shingles into per-shingle doc sets
+    (``collect_set`` deduplicates (doc, shingle) for free), hot shingles
+    (document frequency above ``max(DF_CUTOFF_MIN, DF_CUTOFF_FRAC *
+    corpus)``) are dropped — boilerplate n-grams carry no similarity
+    signal and their posting lists are the pattern's one skew risk —
+    then candidate pairs are generated INSIDE each surviving
+    posting-list array (no self-join of the raw shingle relation), and
+    ``|A∩B| / (|A|+|B|-|A∩B|)`` is computed over the filtered shingle
+    space. Per-doc set sizes come from the filtered postings (so
+    numerator and denominator agree) and broadcast into the pair
+    aggregation. Threshold 0.5 on 5-shingles. The DF cutoff is mirrored
+    exactly in the DuckDB oracle: the production skew guard is itself
+    under the hash gate."""
     return (
-        pairs.join(sa, "doc_a")
-        .join(sb, "doc_b")
+        _posting_pairs(spark, sf_dir)
         .withColumn(
             "jaccard",
             F.round(F.col("common") / (F.col("n_a") + F.col("n_b") - F.col("common")), 6),
@@ -256,19 +292,8 @@ LSH_BUCKET_CAP = 512
 
 def _shingle_sets(spark: SparkSession, sf_dir: str) -> DataFrame:
     """One row per doc: the DISTINCT 5-shingle set as an array, built
-    SHUFFLE-FREE as one narrow Project.
-
-    The naive array form ``shingles_k(tokenize(text), k)`` re-tokenizes
-    the text once per shingle position: Catalyst's CollapseProject
-    inlines the ``tokens`` alias into every reference inside the
-    higher-order-function lambda, and HOF lambdas are outside codegen's
-    subexpression elimination. The fix is a LET BINDING — wrap the
-    tokenized array in a single-element array and ``transform`` over it,
-    so ``tokens`` becomes a lambda VARIABLE (evaluated exactly once per
-    row, never inlined):
-
-        element_at(transform(array(tokenize(text)), toks ->
-                   shingles_k(toks, k)), 1)
+    SHUFFLE-FREE as one narrow Project over ``shingle_set`` (the
+    let-bound form that tokenizes each text once).
 
     An earlier draft paid two shuffles (posexplode + window ``lead`` +
     collect_set groupBy) just to force one-tokenize-per-doc; the let
@@ -290,29 +315,20 @@ def _shingle_sets(spark: SparkSession, sf_dir: str) -> DataFrame:
     of tasks, serializing the shingle featurize (the q_dsir_select
     lesson)."""
     d = load_table(spark, sf_dir, "documents")
-    sets = F.element_at(
-        F.transform(
-            F.array(tokenize(F.col("text"))),
-            lambda toks: shingles_k(toks, SHINGLE_K),
-        ),
-        1,
-    )
+    sets = shingle_set(F.col("text"), SHINGLE_K)
     return d.select("doc_id", sets.alias("ss")).repartition(
         d.sparkSession.sparkContext.defaultParallelism, F.col("doc_id")
     )
 
 
-def _banded_keys(base: DataFrame) -> DataFrame:
-    """(doc_id, band, key) LSH band keys from the per-doc shingle sets:
-    16 hash functions carved as four 32-bit windows out of each of 4
-    salted ``md5(g || ':' || shingle)`` digests (one digest yields four
-    independent windows, so 16 hash functions cost 4 digests per
-    DISTINCT shingle — hashing dominates MinHash cost at corpus scale),
-    per-doc minima as 16 ``array_min`` expressions (no row
-    amplification, no extra shuffle), banded into ``MINHASH_BANDS``
-    keys of ``MINHASH_R`` minima each."""
-    digs = F.transform(
-        "ss",
+def minhash_digests(ss: str) -> Column:
+    """Per-shingle salted digests of the set-array column ``ss``: one
+    struct of ``MINHASH_N // 4`` ``md5(g || ':' || shingle)`` hex
+    strings per DISTINCT shingle (one digest yields four independent
+    32-bit windows — hashing dominates MinHash cost at corpus scale).
+    Bind it as column ``_digs``; ``minhash_minima`` reads it."""
+    return F.transform(
+        ss,
         lambda s: F.struct(
             *[
                 F.md5(F.concat(F.lit(f"{g}:"), s)).alias(f"g{g}")
@@ -321,7 +337,13 @@ def _banded_keys(base: DataFrame) -> DataFrame:
         ),
     )
 
-    def _min_hash(i: int):
+
+def minhash_minima() -> list[Column]:
+    """The ``MINHASH_N`` per-doc minima over the ``_digs`` column: hash
+    i is the (i % 4)-th 32-bit window of digest i // 4, minimized by
+    one ``array_min`` (no row amplification, no extra shuffle)."""
+
+    def _min_hash(i: int) -> Column:
         # single-arg lambda: a two-arg transform lambda would receive
         # the array INDEX as its second argument
         return F.array_min(
@@ -331,8 +353,37 @@ def _banded_keys(base: DataFrame) -> DataFrame:
                     F.substring(d[f"g{i // 4}"], 8 * (i % 4) + 1, 8), 16, 10
                 ).cast("long"),
             )
-        ).alias(f"_m{i}")
+        )
 
+    return [_min_hash(i) for i in range(MINHASH_N)]
+
+
+def lsh_band_keys(minima: list[Column]) -> Column:
+    """The exploded ``bk`` struct (band, key): ``MINHASH_BANDS`` keys of
+    ``MINHASH_R`` consecutive minima each, joined by '-'."""
+    return F.explode(
+        F.array(
+            *[
+                F.struct(
+                    F.lit(b).alias("band"),
+                    F.concat_ws(
+                        "-",
+                        *[
+                            minima[b * MINHASH_R + j].cast("string")
+                            for j in range(MINHASH_R)
+                        ],
+                    ).alias("key"),
+                )
+                for b in range(MINHASH_BANDS)
+            ]
+        )
+    ).alias("bk")
+
+
+def _banded_keys(base: DataFrame) -> DataFrame:
+    """(doc_id, band, key) LSH band keys from the per-doc shingle sets:
+    ``minhash_digests`` -> the 16 ``minhash_minima`` -> ``MINHASH_BANDS``
+    ``lsh_band_keys`` of ``MINHASH_R`` minima each."""
     # shingle-less docs (<SHINGLE_K tokens) never enter banding: their
     # array_min minima are all NULL, concat_ws drops NULLs, and every
     # such doc would share the identical '' key in ALL bands — one
@@ -340,25 +391,17 @@ def _banded_keys(base: DataFrame) -> DataFrame:
     # expansion. The oracle's mh CTE excludes them for free (unnest of
     # an empty set emits no rows), so the filter is parity, not a
     # semantic change.
-    mh = base.filter(F.size("ss") > 0).withColumn("_digs", digs).select(
-        "doc_id", F.size("ss").alias("n"), *[_min_hash(i) for i in range(MINHASH_N)]
+    mh = base.filter(F.size("ss") > 0).withColumn(
+        "_digs", minhash_digests("ss")
+    ).select(
+        "doc_id",
+        F.size("ss").alias("n"),
+        *[m.alias(f"_m{i}") for i, m in enumerate(minhash_minima())],
     )
-    band_structs = [
-        F.struct(
-            F.lit(b).alias("band"),
-            F.concat_ws(
-                "-",
-                *[
-                    F.col(f"_m{b * MINHASH_R + j}").cast("string")
-                    for j in range(MINHASH_R)
-                ],
-            ).alias("key"),
-        )
-        for b in range(MINHASH_BANDS)
-    ]
-    return mh.select(
-        "doc_id", F.explode(F.array(*band_structs)).alias("bk")
-    ).select("doc_id", F.col("bk.band").alias("band"), F.col("bk.key").alias("key"))
+    bk = lsh_band_keys([F.col(f"_m{i}") for i in range(MINHASH_N)])
+    return mh.select("doc_id", bk).select(
+        "doc_id", F.col("bk.band").alias("band"), F.col("bk.key").alias("key")
+    )
 
 
 def minhash_bucket_overflow(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -374,6 +417,16 @@ def minhash_bucket_overflow(spark: SparkSession, sf_dir: str) -> DataFrame:
         banded.groupBy("band", "key")
         .agg(F.count("*").alias("bucket_size"))
         .filter(F.col("bucket_size") > LSH_BUCKET_CAP)
+    )
+
+
+def _cand_docs(cand: DataFrame) -> DataFrame:
+    """(doc_id): the distinct docs of a (doc_a, doc_b) candidate-pair
+    relation — the semi-join key of candidate-first verification."""
+    return (
+        cand.select(F.col("doc_a").alias("doc_id"))
+        .unionByName(cand.select(F.col("doc_b").alias("doc_id")))
+        .distinct()
     )
 
 
@@ -428,21 +481,12 @@ def q_dedup_minhash_banded(spark: SparkSession, sf_dir: str) -> DataFrame:
     # (band, key) partitioning (no second exchange) and the collect is
     # bounded by the cap, so the worst row is CAP^2/2 structs (~2 MB),
     # not m^2
-    bucket_pairs = F.flatten(
-        F.transform(
-            "docs",
-            lambda x, i: F.transform(
-                F.slice(F.col("docs"), i + 2, F.size("docs")),
-                lambda y: F.struct(x.alias("doc_a"), y.alias("doc_b")),
-            ),
-        )
-    )
     cand_head = (
         ranked.filter(F.col("rn") <= LSH_BUCKET_CAP)
         .groupBy("band", "key")
         .agg(F.array_sort(F.collect_set("doc_id")).alias("docs"))
         .filter(F.size("docs") >= 2)
-        .select(F.explode(bucket_pairs).alias("p"))
+        .select(F.explode(_docs_pairs()).alias("p"))
         .select(F.col("p.doc_a").alias("doc_a"), F.col("p.doc_b").alias("doc_b"))
     )
     # overflow (rank past the cap): star pairs against the bucket
@@ -461,11 +505,7 @@ def q_dedup_minhash_banded(spark: SparkSession, sf_dir: str) -> DataFrame:
     # touches non-candidate docs — the whole point of LSH. Denominator
     # sizes ride along the minhash projection (size of the per-doc set
     # array) — no separate pass over the shingle subplan.
-    cand_docs = (
-        cand.select(F.col("doc_a").alias("doc_id"))
-        .unionByName(cand.select(F.col("doc_b").alias("doc_id")))
-        .distinct()
-    )
+    cand_docs = _cand_docs(cand)
     sh_cand = base.join(cand_docs, "doc_id", "left_semi").select(
         "doc_id", F.explode("ss").alias("s")
     )
@@ -1049,42 +1089,7 @@ def q_dedup_containment(spark: SparkSession, sf_dir: str) -> DataFrame:
     evaluated. (Unregistered — 50-slot cap; driver-grade DuckDB parity
     + constructed quote-inclusion goldens in
     tests/test_unregistered_ops.py.)"""
-    sh = _shingles(spark, sf_dir)
-    stats = sh.agg(F.countDistinct("doc_id").alias("n_docs"))
-    cutoff = F.greatest(
-        F.lit(DF_CUTOFF_MIN),
-        F.ceil(F.lit(DF_CUTOFF_FRAC) * F.col("n_docs")),
-    )
-    postings = (
-        sh.groupBy("s")
-        .agg(F.array_sort(F.collect_set("doc_id")).alias("docs"))
-        .crossJoin(F.broadcast(stats))
-        .filter(F.size("docs") <= cutoff)
-        .select("s", "docs")
-    )
-    sizes = (
-        postings.select(F.explode("docs").alias("doc_id"))
-        .groupBy("doc_id")
-        .agg(F.count("*").alias("n"))
-    )
-    pair_arr = F.flatten(
-        F.transform(
-            "docs",
-            lambda x, i: F.transform(
-                F.slice(F.col("docs"), i + 2, F.size("docs")),
-                lambda y: F.struct(x.alias("doc_a"), y.alias("doc_b")),
-            ),
-        )
-    )
-    pairs = (
-        postings.filter(F.size("docs") >= 2)
-        .select(F.explode(pair_arr).alias("p"))
-        .groupBy(F.col("p.doc_a").alias("doc_a"), F.col("p.doc_b").alias("doc_b"))
-        .agg(F.count("*").alias("common"))
-    )
-    sa = sizes.select(F.col("doc_id").alias("doc_a"), F.col("n").alias("n_a"))
-    sb = sizes.select(F.col("doc_id").alias("doc_b"), F.col("n").alias("n_b"))
-    both = pairs.join(sa, "doc_a").join(sb, "doc_b")
+    both = _posting_pairs(spark, sf_dir)
     # evaluate both orientations of each unordered pair
     fwd = both.select(
         F.col("doc_a").alias("doc_inner"),
@@ -1570,11 +1575,7 @@ def q_dedup_snm(spark: SparkSession, sf_dir: str) -> DataFrame:
         .distinct()
     )
     # candidate-first exact verification (the banded-minhash stage)
-    cand_docs = (
-        cand.select(F.col("doc_a").alias("doc_id"))
-        .unionByName(cand.select(F.col("doc_b").alias("doc_id")))
-        .distinct()
-    )
+    cand_docs = _cand_docs(cand)
     sh = base.join(cand_docs, "doc_id", "left_semi").select(
         "doc_id", F.size("ss").alias("n"), F.explode("ss").alias("s")
     )

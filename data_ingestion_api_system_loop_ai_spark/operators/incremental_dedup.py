@@ -61,9 +61,16 @@ import shutil
 from pyspark.sql import DataFrame, SparkSession, Window as W
 from pyspark.sql import functions as F
 
-from ..functions.text import shingles_k, tokenize
+from ..functions.text import shingle_set
 from ..sources import commit_protocol
-from .dedup import JACCARD_THRESHOLD, MINHASH_BANDS, MINHASH_N, MINHASH_R, SHINGLE_K
+from .dedup import (
+    JACCARD_THRESHOLD,
+    MINHASH_N,
+    SHINGLE_K,
+    lsh_band_keys,
+    minhash_digests,
+    minhash_minima,
+)
 
 _COMMITS_DIR = "_commits"
 _EXACT_SCHEMA = "sha string, canonical_id long"
@@ -84,39 +91,14 @@ def _sigs(docs: DataFrame) -> DataFrame:
     signature of the distinct shingle set. One narrow projection (the
     let-bound shingling idiom); shingle-less docs get a NULL sig and
     participate only in exact matching."""
-    ss = F.element_at(
-        F.transform(
-            F.array(tokenize(F.col("text"))),
-            lambda toks: shingles_k(toks, SHINGLE_K),
-        ),
-        1,
-    )
-    digs = F.transform(
-        "_ss",
-        lambda s: F.struct(
-            *[
-                F.md5(F.concat(F.lit(f"{g}:"), s)).alias(f"g{g}")
-                for g in range(MINHASH_N // 4)
-            ]
-        ),
-    )
-
-    def _min_hash(i: int):
-        return F.array_min(
-            F.transform(
-                "_digs",
-                lambda d: F.conv(
-                    F.substring(d[f"g{i // 4}"], 8 * (i % 4) + 1, 8), 16, 10
-                ).cast("long"),
-            )
-        )
-
-    sig = F.array(*[_min_hash(i) for i in range(MINHASH_N)])
+    sig = F.array(*minhash_minima())
     return (
         docs.select(
-            "doc_id", F.sha2(F.col("text"), 256).alias("sha"), ss.alias("_ss")
+            "doc_id",
+            F.sha2(F.col("text"), 256).alias("sha"),
+            shingle_set(F.col("text"), SHINGLE_K).alias("_ss"),
         )
-        .withColumn("_digs", digs)
+        .withColumn("_digs", minhash_digests("_ss"))
         .select(
             "doc_id",
             "sha",
@@ -127,22 +109,12 @@ def _sigs(docs: DataFrame) -> DataFrame:
 
 def _band_rows(sigs: DataFrame) -> DataFrame:
     """Explode a signature relation into (band, key, doc_id, sig)."""
-    bands = [
-        F.struct(
-            F.lit(b).alias("band"),
-            F.concat_ws(
-                "-",
-                *[
-                    F.element_at("sig", b * MINHASH_R + j + 1).cast("string")
-                    for j in range(MINHASH_R)
-                ],
-            ).alias("key"),
-        )
-        for b in range(MINHASH_BANDS)
-    ]
+    bk = lsh_band_keys(
+        [F.element_at("sig", i + 1) for i in range(MINHASH_N)]
+    )
     return (
         sigs.filter(F.col("sig").isNotNull())
-        .select("doc_id", "sig", F.explode(F.array(*bands)).alias("bk"))
+        .select("doc_id", "sig", bk)
         .select(
             F.col("bk.band").alias("band"),
             F.col("bk.key").alias("key"),

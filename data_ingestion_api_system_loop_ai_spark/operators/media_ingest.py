@@ -17,9 +17,9 @@ mirror of ``ingest_url_batch`` (urls.py) and ``ingest_embedding_batch``
   ``afp_fingerprints``, ``vfp_fingerprints`` — renamed to the shared
   ``(asset_id, fp, error)`` shape), then probes history through the
   SAME 4x16-bit pigeonhole banding every family's near-pair join uses
-  (phash.py:344): history fingerprints are semi-joined to the BATCH's
-  band keys before any pairing, so the pair relation is O(batch),
-  never O(history);
+  (``phash.hash_bands``): history fingerprints are semi-joined to the
+  BATCH's band keys before any pairing, so the pair relation is
+  O(batch), never O(history);
 - verdicts per asset: ``media_dup`` (exact or Hamming <= max_hamming
   of a history canonical, or claimed by an earlier asset in this
   batch — one hop, like every family's ``near_id``), else ``kept``;
@@ -55,7 +55,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..sources import commit_protocol as _cp
-from .phash import PHASH_BANDS, PHASH_MAX_HAMMING
+from .phash import PHASH_MAX_HAMMING, hash_bands
 
 _FP_INDEX_SCHEMA = "fp long, canonical_id long"
 
@@ -73,25 +73,6 @@ def _read_fp_index(
     return spark.read.schema(_FP_INDEX_SCHEMA).parquet(
         *[_os.path.join(index_path, "fp", f"unit={u}") for u in units]
     )
-
-
-def _bands(df: DataFrame, col: str = "fp") -> DataFrame:
-    """(fp, band_idx, band_val): the 4x16-bit pigeonhole decomposition
-    — the identical banding ``phash_near_pairs`` uses, so completeness
-    for Hamming <= 3 carries over (<= 3 bit errors cannot touch all 4
-    disjoint bands)."""
-    return df.select(
-        col,
-        F.explode(
-            F.array(*[
-                F.struct(
-                    F.lit(i).alias("band_idx"),
-                    F.expr(f"({col} >> {16 * i}) & 65535").alias("band_val"),
-                )
-                for i in range(PHASH_BANDS)
-            ])
-        ).alias("b"),
-    ).select(col, "b.band_idx", "b.band_val")
 
 
 def incremental_media_dedup(
@@ -118,7 +99,7 @@ def incremental_media_dedup(
     O(history)."""
     good = hashes.filter(F.col("fp").isNotNull()).select("asset_id", "fp")
     batch_fps = good.select("fp").distinct()
-    batch_bands = _bands(batch_fps)
+    batch_bands = hash_bands(batch_fps, "fp")
     band_keys = batch_bands.select("band_idx", "band_val").distinct()
     # history probe slice: canonicals re-aggregated per fp (duplicate
     # units can never multiply probe rows), banded, cut to the batch's
@@ -128,7 +109,7 @@ def incremental_media_dedup(
         .groupBy("fp")
         .agg(F.min("canonical_id").alias("canonical_id"))
     )
-    hist_bands = _bands(hist, "fp").join(
+    hist_bands = hash_bands(hist, "fp").join(
         F.broadcast(band_keys), ["band_idx", "band_val"], "left_semi"
     )
     hist_hits = (

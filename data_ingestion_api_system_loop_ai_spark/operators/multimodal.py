@@ -912,6 +912,8 @@ def _png_raster(payload: bytes) -> tuple[int, int, bytes]:
         if zlib.crc32(typ + data) & 0xFFFFFFFF != crc:
             raise ValueError("PNG chunk CRC mismatch")
         if typ == b"IHDR":
+            if size != 13:
+                raise ValueError(f"PNG IHDR chunk is {size} bytes, not 13")
             w, h, bd, ct, _comp, _filt, inter = struct.unpack(
                 ">IIBBBBB", data
             )

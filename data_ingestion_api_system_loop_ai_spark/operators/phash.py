@@ -46,6 +46,18 @@ Spark shape, and why it holds at 100 TB:
   8-byte-key shuffle at scale; ``bit_count(a ^ b)`` is one JVM
   instruction per surviving candidate.
 
+The media dedup core lives here once, and the other media families
+call it:
+
+- ``fingerprint_batches`` — the fused synth -> decode -> fingerprint
+  batch (torn payload -> error row), run by ``phash_hashes`` and by
+  ``audiofp.afp_fingerprints`` / ``videofp.vfp_fingerprints``;
+- ``hash_bands`` — the 4x16-bit banding, used by ``phash_near_pairs``
+  and by ``media_ingest.incremental_media_dedup``;
+- ``media_dedup_verdict`` — checkpoint, exact groups, near pairs,
+  one-hop near pick and the error arm, returned by ``q_phash_dedup``,
+  ``audiofp.q_audio_dedup`` and ``videofp.q_video_dedup``.
+
 ``near_id`` is the ONE-HOP canonical (min content id among hashes
 within the Hamming radius, self included) — deterministic and cheap;
 full transitive closure over near edges is ``connected_components``'
@@ -71,6 +83,7 @@ hash and brute-force every Hamming pair in
 from __future__ import annotations
 
 import math
+import struct
 from typing import Iterator
 
 import numpy as np
@@ -335,31 +348,27 @@ def phash_assets(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _synth_hash_batch(
-    batches: Iterator[pd.DataFrame],
+def fingerprint_batches(
+    batches: Iterator[pd.DataFrame], col: str, fp_of
 ) -> Iterator[pd.DataFrame]:
-    """Fused synth -> decode -> hash (r13, guide §4.1): the two-stage
-    form shipped every ~15 KB image payload Python -> JVM -> Python
-    through two Arrow boundaries just to hand it back to the next
-    mapInPandas; fusing keeps the payload inside one Python worker and
-    each asset leaves as one 8-byte row. Hashes are identical by
-    construction (same ``phash_payload`` bytes through the same
-    ``_raster_of``/``phash64``); ``phash_assets`` remains the payload
-    relation for byte-level consumers/tests."""
+    """The fused synth -> decode -> fingerprint batch every media family
+    runs (r13, guide §4.1): ``fp_of(doc_id)`` builds the asset's payload
+    and returns its 64-bit fingerprint inside ONE Python worker, so the
+    payload never crosses an Arrow boundary and each asset leaves as
+    one 8-byte ``(asset_id, <col>, error)`` row. A torn payload becomes
+    an error row, never a dead executor task: every decoder raises
+    ValueError on torn bytes, and ``struct.error`` covers a truncation
+    landing inside a fixed-width header (the r9 multimodal lesson)."""
     for pdf in batches:
-        rows = []
+        ids, fps, errs = [], [], []
         for d in pdf["doc_id"]:
-            aid = int(d)
+            ids.append(int(d))
             try:
-                w, h, raster = _raster_of(phash_payload(aid))
-                rows.append(
-                    {"asset_id": aid,
-                     "phash": phash64(w, h, raster), "error": None}
-                )
-            except ValueError as exc:
-                rows.append(
-                    {"asset_id": aid, "phash": None, "error": str(exc)}
-                )
+                fps.append(fp_of(int(d)))
+                errs.append(None)
+            except (ValueError, struct.error) as exc:
+                fps.append(None)
+                errs.append(str(exc))
         # NULLABLE Int64 built FROM THE PYTHON INTS, never float64: one
         # error row's None in a plain pd.DataFrame(...) coerces the
         # whole column to float64 at construction, rounding every hash
@@ -367,15 +376,23 @@ def _synth_hash_batch(
         # just freezes the damage)
         yield pd.DataFrame(
             {
-                "asset_id": [r["asset_id"] for r in rows],
-                "phash": pd.array(
-                    [r["phash"] for r in rows], dtype="Int64"
-                ),
-                "error": pd.array(
-                    [r["error"] for r in rows], dtype=object
-                ),
+                "asset_id": pd.array(ids, dtype="int64"),
+                col: pd.array(fps, dtype="Int64"),
+                "error": pd.array(errs, dtype="string"),
             }
         )
+
+
+def _synth_hash_batch(
+    batches: Iterator[pd.DataFrame],
+) -> Iterator[pd.DataFrame]:
+    """``fingerprint_batches`` over ``phash_payload`` bytes, decoded by
+    ``_raster_of`` and hashed by ``phash64``. ``phash_assets`` is the
+    payload relation the r13 stage probe (tools/r13_stage_probe.py)
+    times this stage against."""
+    return fingerprint_batches(
+        batches, "phash", lambda d: phash64(*_raster_of(phash_payload(d)))
+    )
 
 
 def phash_hashes(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -387,18 +404,12 @@ def phash_hashes(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def phash_near_pairs(
-    hashes: DataFrame,
-    max_hamming: int = PHASH_MAX_HAMMING,
-    col: str = "phash",
-) -> DataFrame:
-    """(<col>_a, <col>_b, hamming) over DISTINCT hashes, complete for
-    Hamming <= max_hamming by the 4x16-bit pigeonhole bands. ``col``
-    names the 64-bit hash column — the audio fingerprint (B130) reuses
-    the identical banding on its ``afp`` column."""
-    distinct = hashes.filter(F.col(col).isNotNull()).select(col).distinct()
-    ca, cb = f"{col}_a", f"{col}_b"
-    bands = distinct.select(
+def hash_bands(df: DataFrame, col: str) -> DataFrame:
+    """(<col>, band_idx, band_val): the 4x16-bit pigeonhole
+    decomposition of a 64-bit hash column — <= 3 bit errors cannot
+    touch all 4 disjoint bands, so an equi-join on (band_idx, band_val)
+    finds every pair within Hamming 3."""
+    return df.select(
         col,
         F.explode(
             F.array(*[
@@ -410,6 +421,20 @@ def phash_near_pairs(
             ])
         ).alias("b"),
     ).select(col, "b.band_idx", "b.band_val")
+
+
+def phash_near_pairs(
+    hashes: DataFrame,
+    max_hamming: int = PHASH_MAX_HAMMING,
+    col: str = "phash",
+) -> DataFrame:
+    """(<col>_a, <col>_b, hamming) over DISTINCT hashes, complete for
+    Hamming <= max_hamming by the 4x16-bit pigeonhole bands. ``col``
+    names the 64-bit hash column — the audio (``afp``) and video
+    (``vfp``) fingerprints reuse the identical banding."""
+    distinct = hashes.filter(F.col(col).isNotNull()).select(col).distinct()
+    ca, cb = f"{col}_a", f"{col}_b"
+    bands = hash_bands(distinct, col)
     a = bands.select(F.col(col).alias(ca), "band_idx", "band_val")
     b = bands.select(F.col(col).alias(cb), "band_idx", "band_val")
     return (
@@ -425,58 +450,52 @@ def phash_near_pairs(
     )
 
 
-def q_phash_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """(asset_id, phash, content_id, near_id, hamming_to_near, error):
-    the per-asset perceptual-dedup verdict. ``content_id`` = smallest
-    asset sharing the exact hash (cross-container byte-different
-    copies collapse here); ``near_id`` = smallest content id within
-    Hamming <= 3 of this asset's hash, one hop, self included (the
-    transitive closure over near edges is ``connected_components``').
-    Torn payloads surface as error rows with null hash columns.
-    (Unregistered, NON-SQL-EXPRESSIBLE — payload bytes never exist in
-    SQL; direct tests replay every hash and brute-force every pair.)"""
+def media_dedup_verdict(fps: DataFrame, col: str, max_hamming: int) -> DataFrame:
+    """(asset_id, <col>, content_id, near_id, hamming_to_near, error):
+    the per-asset verdict every media dedup query returns over its
+    ``(asset_id, <col>, error)`` fingerprint relation. ``content_id`` =
+    smallest asset sharing the exact hash; ``near_id`` = smallest
+    content id within Hamming <= max_hamming, one hop, self included
+    (the transitive closure is ``connected_components``'). Assets whose
+    hash is null surface as error rows with null hash columns."""
     # the hash relation feeds FOUR subtrees (content groups, band
     # pairs, the verdict join, the error arm) — checkpoint it so the
     # Python decode+hash stages run once, not once per branch (the
     # blocks are 17 bytes/asset; the returned plan reads them, so they
     # stay persisted — the documented final-checkpoint shape)
-    hashes = phash_hashes(spark, sf_dir).localCheckpoint()
-    good = hashes.filter(F.col("phash").isNotNull())
-    content = good.groupBy("phash").agg(
-        F.min("asset_id").alias("content_id")
-    )
-    pairs = phash_near_pairs(good)
+    fps = fps.localCheckpoint()
+    good = fps.filter(F.col(col).isNotNull())
+    content = good.groupBy(col).agg(F.min("asset_id").alias("content_id"))
+    pairs = phash_near_pairs(good, max_hamming=max_hamming, col=col)
     # per-hash best near neighbor: both edge directions + self(0)
     edges = (
         pairs.select(
-            F.col("phash_a").alias("phash"),
-            F.col("phash_b").alias("other"),
+            F.col(f"{col}_a").alias(col), F.col(f"{col}_b").alias("other"),
             "hamming",
         )
         .unionByName(
             pairs.select(
-                F.col("phash_b").alias("phash"),
-                F.col("phash_a").alias("other"),
+                F.col(f"{col}_b").alias(col), F.col(f"{col}_a").alias("other"),
                 "hamming",
             )
         )
         .join(
             content.select(
-                F.col("phash").alias("other"),
+                F.col(col).alias("other"),
                 F.col("content_id").alias("other_content"),
             ),
             "other",
         )
-        .select("phash", "other_content", "hamming")
+        .select(col, "other_content", "hamming")
         .unionByName(
             content.select(
-                "phash",
+                col,
                 F.col("content_id").alias("other_content"),
                 F.lit(0).alias("hamming"),
             )
         )
     )
-    near = edges.groupBy("phash").agg(
+    near = edges.groupBy(col).agg(
         F.min("other_content").alias("near_id"),
         # the hamming TO that chosen canonical (min (content, hamming)
         # struct keeps the pair consistent under ties)
@@ -485,26 +504,38 @@ def q_phash_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
         ),
     )
     verdict = (
-        good.join(content, "phash")
-        .join(near, "phash")
+        good.join(content, col)
+        .join(near, col)
         .select(
             "asset_id",
-            "phash",
+            col,
             "content_id",
             "near_id",
             F.col("hamming_to_near").cast("int").alias("hamming_to_near"),
             F.lit(None).cast("string").alias("error"),
         )
     )
-    errors = hashes.filter(F.col("phash").isNull()).select(
+    errors = fps.filter(F.col(col).isNull()).select(
         "asset_id",
-        F.lit(None).cast("long").alias("phash"),
+        F.lit(None).cast("long").alias(col),
         F.lit(None).cast("long").alias("content_id"),
         F.lit(None).cast("long").alias("near_id"),
         F.lit(None).cast("int").alias("hamming_to_near"),
         "error",
     )
     return verdict.unionByName(errors)
+
+
+def q_phash_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """(asset_id, phash, content_id, near_id, hamming_to_near, error):
+    the per-asset perceptual-dedup verdict (``media_dedup_verdict``).
+    Cross-container byte-different copies collapse into one
+    ``content_id``; torn payloads surface as error rows. (Unregistered,
+    NON-SQL-EXPRESSIBLE — payload bytes never exist in SQL; direct
+    tests replay every hash and brute-force every pair.)"""
+    return media_dedup_verdict(
+        phash_hashes(spark, sf_dir), "phash", PHASH_MAX_HAMMING
+    )
 
 
 UNREGISTERED_PHASH_QUERIES = {"q_phash_dedup": q_phash_dedup}

@@ -99,17 +99,43 @@ def _priority_rank(col: Column) -> Column:
     )
 
 
-def batches(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Chunk ids into consecutive batches of ``BATCH_SIZE`` preserving
-    order — reference ``ingestService.js:171-179``. Pure array expression
-    (``transform(sequence(...), i -> slice(ids, ...))``): shuffle-free,
-    whole-stage-codegen'd, order-exact by construction."""
-    req = requests(spark, sf_dir)
+def chunk_array() -> Column:
+    """The ``ids`` column cut into consecutive ``BATCH_SIZE`` slices,
+    order preserved — reference ``ingestService.js:171-179``. Pure
+    array expression (``transform(sequence(...), i -> slice(ids,
+    ...))``): shuffle-free, whole-stage-codegen'd, order-exact by
+    construction; shared by ``batches`` and the live drain's
+    ``streaming.live.chunk_requests``."""
     n_batches = F.ceil(F.size("ids") / F.lit(BATCH_SIZE)).cast("int")
-    chunks = F.transform(
+    return F.transform(
         F.sequence(F.lit(0), n_batches - 1),
         lambda i: F.slice(F.col("ids"), i * BATCH_SIZE + 1, BATCH_SIZE),
     )
+
+
+IDS_ERROR = "Invalid input: ids array is required and cannot be empty."
+PRIORITY_ERROR = (
+    "Invalid input: priority is required and must be HIGH, MEDIUM, or LOW."
+)
+
+
+def request_checks(ids: str, priority: str) -> tuple[Column, Column]:
+    """(ids_ok, prio_ok): the reference's two ``POST /ingest`` checks
+    (``ingestController.js:10-15``) over the named columns — a
+    non-empty ids array, and a priority that upper-cases to HIGH,
+    MEDIUM or LOW. They fail with ``IDS_ERROR`` then ``PRIORITY_ERROR``,
+    in that order."""
+    ids_ok = F.col(ids).isNotNull() & (F.size(ids) > 0)
+    prio_ok = F.upper(F.coalesce(F.col(priority), F.lit(""))).isin(
+        "HIGH", "MEDIUM", "LOW"
+    )
+    return ids_ok, prio_ok
+
+
+def batches(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Chunk ids into consecutive batches of ``BATCH_SIZE`` preserving
+    order (``chunk_array``)."""
+    req = requests(spark, sf_dir)
     return (
         req.filter(F.size("ids") > 0)
         .select(
@@ -117,7 +143,7 @@ def batches(spark: SparkSession, sf_dir: str) -> DataFrame:
             "request_id",
             "priority",
             "created_at",
-            F.posexplode(chunks).alias("batch_index", "batch_ids"),
+            F.posexplode(chunk_array()).alias("batch_index", "batch_ids"),
         )
         .withColumn("batch_id", F.concat_ws("-", "request_id", "batch_index"))
         .withColumn("priority_rank", _priority_rank(F.col("priority")))
@@ -241,22 +267,14 @@ def q_validate_requests(spark: SparkSession, sf_dir: str) -> DataFrame:
         AS t(request_id, ids, raw_priority, created_at)
         """
     )
-    ids_ok = F.col("ids").isNotNull() & (F.size("ids") > 0)
-    prio_ok = F.upper(F.coalesce(F.col("raw_priority"), F.lit(""))).isin(
-        "HIGH", "MEDIUM", "LOW"
-    )
+    ids_ok, prio_ok = request_checks("ids", "raw_priority")
     return base.unionByName(bad).select(
         "request_id",
         "raw_priority",
         F.when(prio_ok, F.upper("raw_priority")).alias("priority"),
         (ids_ok & prio_ok).alias("is_valid"),
-        F.when(
-            ~ids_ok, F.lit("Invalid input: ids array is required and cannot be empty.")
-        )
-        .when(
-            ~prio_ok,
-            F.lit("Invalid input: priority is required and must be HIGH, MEDIUM, or LOW."),
-        )
+        F.when(~ids_ok, F.lit(IDS_ERROR))
+        .when(~prio_ok, F.lit(PRIORITY_ERROR))
         .alias("error"),
     )
 
@@ -412,30 +430,11 @@ def _wire_responses(parsed: DataFrame) -> DataFrame:
     single source of truth for the validation order, the exact 400
     bodies, and the 202 body (used by the batch file path above and the
     live HTTP listener's per-request path, ``http_api.py``)."""
-    ids_ok = F.col("p.ids").isNotNull() & (F.size("p.ids") > 0)
-    prio_ok = F.upper(F.coalesce(F.col("p.priority"), F.lit(""))).isin(
-        "HIGH", "MEDIUM", "LOW"
-    )
+    ids_ok, prio_ok = request_checks("p.ids", "p.priority")
     body = (
-        F.when(
-            ~ids_ok,
-            F.to_json(
-                F.struct(
-                    F.lit(
-                        "Invalid input: ids array is required and cannot be empty."
-                    ).alias("error")
-                )
-            ),
-        )
+        F.when(~ids_ok, F.to_json(F.struct(F.lit(IDS_ERROR).alias("error"))))
         .when(
-            ~prio_ok,
-            F.to_json(
-                F.struct(
-                    F.lit(
-                        "Invalid input: priority is required and must be HIGH, MEDIUM, or LOW."
-                    ).alias("error")
-                )
-            ),
+            ~prio_ok, F.to_json(F.struct(F.lit(PRIORITY_ERROR).alias("error")))
         )
         .otherwise(F.to_json(F.struct(F.expr("uuid()").alias("ingestion_id"))))
     )

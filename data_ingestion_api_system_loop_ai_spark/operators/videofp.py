@@ -70,15 +70,18 @@ DCT and brute-force every Hamming pair (tests/test_videofp.py).
 from __future__ import annotations
 
 import math
-import struct
 from typing import Iterator
 
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 
-from .phash import _resample32, phash_near_pairs
+from .phash import (
+    _asset_id_scan,
+    _resample32,
+    fingerprint_batches,
+    media_dedup_verdict,
+)
 
 VFP_W = 48             # fixture frame size (4:2:0 wants even dims)
 VFP_H = 32
@@ -321,62 +324,20 @@ def _synth_batch(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         )
 
 
-def _fp_batch(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-    for pdf in batches:
-        ids, fps, errs = [], [], []
-        for aid, payload in zip(pdf["asset_id"], pdf["payload"]):
-            ids.append(int(aid))
-            try:
-                fps.append(vfp64(decode_clip_y4m(bytes(payload))))
-                errs.append(None)
-            except (ValueError, struct.error) as exc:
-                # torn bytes must become error rows, never a dead
-                # executor task (the r9 multimodal lesson)
-                fps.append(None)
-                errs.append(str(exc))
-        yield pd.DataFrame(
-            {
-                "asset_id": pd.array(ids, dtype="int64"),
-                "vfp": pd.array(fps, dtype="Int64"),
-                "error": pd.array(errs, dtype="string"),
-            }
-        )
-
-
 def _synth_fp_batch(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-    """Fused synth -> decode -> fingerprint (r13, guide §4.1): the
-    two-stage form shipped every ~28 KB Y4M payload Python -> JVM ->
-    Python through two Arrow boundaries just to hand it back to the
-    next mapInPandas; fusing keeps the payload inside one Python worker
-    and each clip leaves as one 8-byte row. Fingerprints are identical
-    by construction (same ``vfp_payload`` bytes through the same
-    ``decode_clip_y4m``/``vfp64``); ``vfp_assets`` remains the payload
-    relation for byte-level consumers/tests."""
-    for pdf in batches:
-        ids, fps, errs = [], [], []
-        for d in pdf["doc_id"]:
-            ids.append(int(d))
-            try:
-                fps.append(vfp64(decode_clip_y4m(vfp_payload(int(d)))))
-                errs.append(None)
-            except (ValueError, struct.error) as exc:
-                fps.append(None)
-                errs.append(str(exc))
-        yield pd.DataFrame(
-            {
-                "asset_id": pd.array(ids, dtype="int64"),
-                "vfp": pd.array(fps, dtype="Int64"),
-                "error": pd.array(errs, dtype="string"),
-            }
-        )
+    """``phash.fingerprint_batches`` over ``vfp_payload`` bytes, decoded
+    by ``decode_clip_y4m`` and fingerprinted by ``vfp64``.
+    ``vfp_assets`` is the payload relation the r13 stage probe
+    (tools/r13_stage_probe.py) times this stage against."""
+    return fingerprint_batches(
+        batches, "vfp", lambda d: vfp64(decode_clip_y4m(vfp_payload(d)))
+    )
 
 
 def vfp_assets(spark: SparkSession, sf_dir: str) -> DataFrame:
     # one shared asset-id universe with the fused fingerprint relation
     # (phash._asset_id_scan — ADVICE r13 #4); CPU-heavy small scan:
     # same spread discipline as B120/B130
-    from .phash import _asset_id_scan
-
     return _asset_id_scan(spark, sf_dir).mapInPandas(
         _synth_batch, "asset_id long, payload binary"
     )
@@ -387,8 +348,6 @@ def vfp_fingerprints(spark: SparkSession, sf_dir: str) -> DataFrame:
     narrow Arrow stage — each clip leaves as one 8-byte row and the
     payload bytes never cross the Python/JVM boundary. Derives its
     asset-id universe from the same scan as ``vfp_assets``."""
-    from .phash import _asset_id_scan
-
     return _asset_id_scan(spark, sf_dir).mapInPandas(
         _synth_fp_batch, "asset_id long, vfp long, error string"
     )
@@ -396,72 +355,14 @@ def vfp_fingerprints(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def q_video_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(asset_id, vfp, content_id, near_id, hamming_to_near, error):
-    the per-clip fingerprint-dedup verdict — ``content_id`` = smallest
-    clip sharing the exact fingerprint, ``near_id`` = smallest content
-    id within Hamming <= 3, one hop, self included (transitive closure
-    is ``connected_components``' job, as for every dedup family).
-    Torn payloads surface as error rows. (Unregistered,
-    NON-SQL-EXPRESSIBLE — payload bytes never exist in SQL; direct
-    tests replay every fingerprint and brute-force every pair.)"""
-    # same four-consumer checkpoint shape as q_phash_dedup/q_audio_dedup
-    fps = vfp_fingerprints(spark, sf_dir).localCheckpoint()
-    good = fps.filter(F.col("vfp").isNotNull())
-    content = good.groupBy("vfp").agg(F.min("asset_id").alias("content_id"))
-    pairs = phash_near_pairs(good, max_hamming=VFP_MAX_HAMMING, col="vfp")
-    edges = (
-        pairs.select(
-            F.col("vfp_a").alias("vfp"), F.col("vfp_b").alias("other"),
-            "hamming",
-        )
-        .unionByName(
-            pairs.select(
-                F.col("vfp_b").alias("vfp"), F.col("vfp_a").alias("other"),
-                "hamming",
-            )
-        )
-        .join(
-            content.select(
-                F.col("vfp").alias("other"),
-                F.col("content_id").alias("other_content"),
-            ),
-            "other",
-        )
-        .select("vfp", "other_content", "hamming")
-        .unionByName(
-            content.select(
-                "vfp",
-                F.col("content_id").alias("other_content"),
-                F.lit(0).alias("hamming"),
-            )
-        )
+    the per-clip fingerprint-dedup verdict (``phash.media_dedup_verdict``
+    — the same shape as q_phash_dedup). Torn payloads surface as error
+    rows. (Unregistered, NON-SQL-EXPRESSIBLE — payload bytes never
+    exist in SQL; direct tests replay every fingerprint and
+    brute-force every pair.)"""
+    return media_dedup_verdict(
+        vfp_fingerprints(spark, sf_dir), "vfp", VFP_MAX_HAMMING
     )
-    near = edges.groupBy("vfp").agg(
-        F.min("other_content").alias("near_id"),
-        F.min(F.struct("other_content", "hamming"))["hamming"].alias(
-            "hamming_to_near"
-        ),
-    )
-    verdict = (
-        good.join(content, "vfp")
-        .join(near, "vfp")
-        .select(
-            "asset_id",
-            "vfp",
-            "content_id",
-            "near_id",
-            F.col("hamming_to_near").cast("int").alias("hamming_to_near"),
-            F.lit(None).cast("string").alias("error"),
-        )
-    )
-    errors = fps.filter(F.col("vfp").isNull()).select(
-        "asset_id",
-        F.lit(None).cast("long").alias("vfp"),
-        F.lit(None).cast("long").alias("content_id"),
-        F.lit(None).cast("long").alias("near_id"),
-        F.lit(None).cast("int").alias("hamming_to_near"),
-        "error",
-    )
-    return verdict.unionByName(errors)
 
 
 UNREGISTERED_VIDEOFP_QUERIES = {"q_video_dedup": q_video_dedup}

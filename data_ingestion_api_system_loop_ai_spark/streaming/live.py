@@ -58,6 +58,7 @@ from pyspark.sql.types import (
     StructType,
 )
 
+from ..operators.pipeline import _priority_rank, chunk_array
 from ..schemas import BATCH_SIZE
 from .serving import ServingTable, attach_serving_sink
 
@@ -468,36 +469,23 @@ def kafka_requests_stream(
 
 
 def chunk_requests(
-    requests: DataFrame,
-    batch_size: int = BATCH_SIZE,
-    extra_cols: tuple[str, ...] = (),
+    requests: DataFrame, extra_cols: tuple[str, ...] = ()
 ) -> DataFrame:
-    """Stateless chunking of a request stream into jobs — the same
-    order-preserving array-slice expression as the batch operator
-    (``operators/pipeline.py batches()``; reference
-    ``ingestService.js:171-179``). ``extra_cols`` pass through untouched
+    """Stateless chunking of a request stream into jobs — the batch
+    operator's ``pipeline.chunk_array`` and ``_priority_rank`` (over
+    the upper-cased priority). ``extra_cols`` pass through untouched
     (e.g. a tenant/queue id for the multi-queue drain)."""
-    n_batches = F.ceil(F.size("ids") / F.lit(batch_size)).cast("int")
-    chunks = F.transform(
-        F.sequence(F.lit(0), n_batches - 1),
-        lambda i: F.slice(F.col("ids"), i * batch_size + 1, batch_size),
-    )
-    rank = (
-        F.when(F.upper("priority") == "HIGH", 1)
-        .when(F.upper("priority") == "MEDIUM", 2)
-        .otherwise(3)
-    )
     return (
         requests.filter(F.size("ids") > 0)
         .select(
             "request_id",
             F.upper("priority").alias("priority"),
             "created_at_ms",
-            F.posexplode(chunks).alias("batch_index", "batch_ids"),
+            F.posexplode(chunk_array()).alias("batch_index", "batch_ids"),
             *extra_cols,
         )
         .withColumn("batch_id", F.concat_ws("-", "request_id", "batch_index"))
-        .withColumn("priority_rank", rank)
+        .withColumn("priority_rank", _priority_rank(F.upper("priority")))
         # numeric tie-break key matching the batch pipeline's request_key
         # (o_orderkey) and the reference heap's enqueue order for numeric
         # wire ids ('10' < '2' lexicographically but 2 < 10 numerically);

@@ -258,3 +258,32 @@ def test_resample32_vectorized_bit_identical():
     for h, w in shapes:
         a = rng.integers(0, 256, size=(h, w)).astype(np.float64)
         assert _resample32(a).tobytes() == legacy(a).tobytes(), (h, w)
+
+
+def test_png_short_ihdr_raises_value_error():
+    """An IHDR chunk shorter than its 13-byte layout — CRC intact, so
+    only the length check can catch it — must raise ValueError, the
+    error every PNG caller turns into an error row (a ``struct.error``
+    escaping here would kill the decode task instead)."""
+    import struct
+    import zlib
+
+    from data_ingestion_api_system_loop_ai_spark.operators.multimodal import (
+        _png_raster,
+        decode_real,
+    )
+
+    def chunk(typ: bytes, data: bytes) -> bytes:
+        crc = zlib.crc32(typ + data) & 0xFFFFFFFF
+        return struct.pack(">I", len(data)) + typ + data + struct.pack(">I", crc)
+
+    ihdr12 = struct.pack(">IIBBBB", 4, 4, 8, 2, 0, 0)  # interlace byte missing
+    png = (
+        b"\x89PNG\r\n\x1a\n"
+        + chunk(b"IHDR", ihdr12)
+        + chunk(b"IDAT", zlib.compress(bytes(4 * 13)))
+        + chunk(b"IEND", b"")
+    )
+    for decode in (_png_raster, _raster_of, decode_real):
+        with pytest.raises(ValueError):
+            decode(png)

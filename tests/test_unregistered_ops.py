@@ -44,6 +44,43 @@ def ann_ix(spark, sf_dir, tmp_path_factory):
     return ix
 
 
+@pytest.fixture(scope="module")
+def text_model(spark, sf_dir, tmp_path_factory):
+    """One persisted text/retrieval model (default arguments); the
+    from-model tests only read it."""
+    from data_ingestion_api_system_loop_ai_spark.operators import text_models as tm
+
+    mp = str(tmp_path_factory.mktemp("text_model") / "model")
+    tm.build_text_models(spark, sf_dir, mp)
+    return mp
+
+
+@pytest.fixture(scope="module")
+def kmeans_model(spark, sf_dir, tmp_path_factory):
+    """One persisted k-means model (default arguments); the from-model
+    tests only read it."""
+    from data_ingestion_api_system_loop_ai_spark.operators.semdedup import (
+        build_kmeans_model,
+    )
+
+    mp = str(tmp_path_factory.mktemp("km_model") / "model")
+    build_kmeans_model(spark, sf_dir, mp)
+    return mp
+
+
+@pytest.fixture(scope="module")
+def bpe_model(spark, sf_dir, tmp_path_factory):
+    """One persisted BPE model (default arguments); the from-model
+    tests only read it."""
+    from data_ingestion_api_system_loop_ai_spark.operators.bpe import (
+        build_bpe_model,
+    )
+
+    mp = str(tmp_path_factory.mktemp("bpe_model") / "model")
+    build_bpe_model(spark, sf_dir, mp)
+    return mp
+
+
 def _ann_copy(ann_ix: str, tmp_path, name: str) -> str:
     ix = str(tmp_path / name)
     shutil.copytree(ann_ix, ix)
@@ -2223,7 +2260,9 @@ def test_dedup_prefix_candidates_subset_with_constructed_dups(spark):
     assert not any(4 in p for p in got)
 
 
-def test_semdedup_from_model_matches_fit_inside(spark, sf_dir, tmp_path):
+def test_semdedup_from_model_matches_fit_inside(
+    spark, sf_dir, tmp_path, kmeans_model
+):
     """The persisted-cluster-model path (build/probe split) must
     reproduce the fit-inside SemDeDup verdicts BIT-IDENTICALLY: the
     model stores the centroids that produced the final assignment, so
@@ -2231,17 +2270,16 @@ def test_semdedup_from_model_matches_fit_inside(spark, sf_dir, tmp_path):
     import pytest as _pytest
 
     from data_ingestion_api_system_loop_ai_spark.operators.semdedup import (
-        build_kmeans_model,
         q_semdedup,
         q_semdedup_from_model,
     )
 
-    mp = str(tmp_path / "km_model")
     with _pytest.raises(FileNotFoundError):
-        q_semdedup_from_model(spark, sf_dir, mp)
-    build_kmeans_model(spark, sf_dir, mp)
+        q_semdedup_from_model(spark, sf_dir, str(tmp_path / "km_model"))
     fit_inside = sorted(map(tuple, q_semdedup(spark, sf_dir).collect()))
-    frozen = sorted(map(tuple, q_semdedup_from_model(spark, sf_dir, mp).collect()))
+    frozen = sorted(
+        map(tuple, q_semdedup_from_model(spark, sf_dir, kmeans_model).collect())
+    )
     assert fit_inside == frozen
 
 
@@ -3045,7 +3083,7 @@ def test_embedding_clusters_from_index_matches_inline(spark, sf_dir, ann_ix):
     assert inline == from_ix and inline
 
 
-def test_text_models_from_model_bitidentical(spark, sf_dir, tmp_path):
+def test_text_models_from_model_bitidentical(spark, sf_dir, tmp_path, text_model):
     """VERDICT r04 #1: the persisted text/retrieval model (the last
     build/probe split) must reproduce every train-inside form
     BIT-IDENTICALLY — unigram LM scores, bigram LM scores, BM25 top-k,
@@ -3062,10 +3100,8 @@ def test_text_models_from_model_bitidentical(spark, sf_dir, tmp_path):
         q_hybrid_rank,
     )
 
-    mp = str(tmp_path / "text_model")
     with pytest.raises(FileNotFoundError):
-        tm.q_lm_score_from_model(spark, sf_dir, mp)
-    tm.build_text_models(spark, sf_dir, mp)
+        tm.q_lm_score_from_model(spark, sf_dir, str(tmp_path / "text_model"))
 
     for inline_fn, model_fn in [
         (q_lm_score, tm.q_lm_score_from_model),
@@ -3076,12 +3112,12 @@ def test_text_models_from_model_bitidentical(spark, sf_dir, tmp_path):
     ]:
         inline = sorted(map(tuple, inline_fn(spark, sf_dir).collect()))
         frozen = sorted(
-            map(tuple, model_fn(spark, sf_dir, mp).collect())
+            map(tuple, model_fn(spark, sf_dir, text_model).collect())
         )
         assert inline == frozen and len(inline) > 0, inline_fn.__name__
 
 
-def test_bm25_from_model_handles_absent_probe_term(spark, sf_dir, tmp_path):
+def test_bm25_from_model_handles_absent_probe_term(spark, sf_dir, text_model):
     """A probe term absent from the corpus must score as df=0 on both
     paths (the stored df relation simply has no row for it) — the
     from-model pivot's conditional sum reproduces the inline zero."""
@@ -3093,21 +3129,21 @@ def test_bm25_from_model_handles_absent_probe_term(spark, sf_dir, tmp_path):
     from data_ingestion_api_system_loop_ai_spark.sources.loader import load_table
 
     terms = ("query", "zzzznotaword", "stream")
-    mp = str(tmp_path / "text_model_absent")
-    tm.build_text_models(spark, sf_dir, mp)
     docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
     inline = sorted(map(tuple, bm25_topk(bm25_scores(docs, terms)).collect()))
     frozen = sorted(
         map(
             tuple,
-            tm.q_bm25_rank_from_model(spark, sf_dir, mp, terms=terms).collect(),
+            tm.q_bm25_rank_from_model(
+                spark, sf_dir, text_model, terms=terms
+            ).collect(),
         )
     )
     assert inline == frozen and len(inline) > 0
 
 
 def test_lm_batch_scoring_from_model_matches_corpus_trained_inline(
-    spark, sf_dir, tmp_path
+    spark, sf_dir, text_model
 ):
     """Batch scoring — the production shape of the text-model split:
     scoring the 1% ingest slice against the frozen corpus LM must equal
@@ -3121,8 +3157,6 @@ def test_lm_batch_scoring_from_model_matches_corpus_trained_inline(
     )
     from data_ingestion_api_system_loop_ai_spark.sources.loader import load_table
 
-    mp = str(tmp_path / "text_model_batch")
-    tm.build_text_models(spark, sf_dir, mp)
     docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
     batch = docs.filter(F.col("doc_id") % 100 == 0)
     freq = unigram_counts(docs)  # trained on the FULL corpus
@@ -3135,7 +3169,7 @@ def test_lm_batch_scoring_from_model_matches_corpus_trained_inline(
     frozen = sorted(
         map(
             tuple,
-            tm.q_lm_score_batch_from_model(spark, sf_dir, mp).collect(),
+            tm.q_lm_score_batch_from_model(spark, sf_dir, text_model).collect(),
         )
     )
     assert inline == frozen and len(inline) > 0
@@ -3744,7 +3778,9 @@ def test_embedding_abtt_matches_independent_replay(spark, sf_dir):
         assert abs(lhs - r["centered_norm"] ** 2) < 1e-4
 
 
-def test_bpe_frozen_model_matches_inline_encode(spark, sf_dir, tmp_path):
+def test_bpe_frozen_model_matches_inline_encode(
+    spark, sf_dir, tmp_path, bpe_model
+):
     """The persisted BPE model completes the tokenizer-family
     build/probe split: encoding against the frozen merge table must be
     bit-identical to encoding with a freshly trained in-memory merge
@@ -3754,7 +3790,6 @@ def test_bpe_frozen_model_matches_inline_encode(spark, sf_dir, tmp_path):
     from data_ingestion_api_system_loop_ai_spark.operators.bpe import (
         bpe_encode,
         bpe_train,
-        build_bpe_model,
         load_bpe_merges,
         q_bpe_encode_from_model,
     )
@@ -3762,14 +3797,13 @@ def test_bpe_frozen_model_matches_inline_encode(spark, sf_dir, tmp_path):
         load_table,
     )
 
-    mp = str(tmp_path / "bpe_model")
     with _pytest.raises(FileNotFoundError, match="BPE model"):
-        load_bpe_merges(spark, mp)
-    build_bpe_model(spark, sf_dir, mp)
+        load_bpe_merges(spark, str(tmp_path / "bpe_model"))
 
     docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
     merges, _ = bpe_train(load_table(spark, sf_dir, "documents"))
-    assert load_bpe_merges(spark, mp) == merges  # the stored model IS the training output
+    # the stored model IS the training output
+    assert load_bpe_merges(spark, bpe_model) == merges
     inline = sorted(
         (r["doc_id"], tuple(r["bpe_tokens"]))
         for r in bpe_encode(docs, merges).select(
@@ -3778,7 +3812,7 @@ def test_bpe_frozen_model_matches_inline_encode(spark, sf_dir, tmp_path):
     )
     frozen = sorted(
         (r["doc_id"], tuple(r["bpe_tokens"]))
-        for r in q_bpe_encode_from_model(spark, sf_dir, mp).collect()
+        for r in q_bpe_encode_from_model(spark, sf_dir, bpe_model).collect()
     )
     assert frozen == inline and len(frozen) > 0
 
@@ -4588,7 +4622,7 @@ def test_secret_scan_parity_and_replay(spark, sf_dir):
         con.close()
 
 
-def test_tokenizer_fertility_matches_python_replay(spark, sf_dir, tmp_path):
+def test_tokenizer_fertility_matches_python_replay(spark, sf_dir, bpe_model):
     """Tokenizer fertility / chars-per-token audit (Rust et al. 2021):
     full-metric replay against the independent pure-Python BPE on the
     identical corpus — train, encode, and the per-language aggregation
@@ -4666,12 +4700,12 @@ def test_tokenizer_fertility_matches_python_replay(spark, sf_dir, tmp_path):
 
     # from-model form pinned identical to inline (stored merges are
     # exact strings; same encode fold, same integer sums)
-    mp = str(tmp_path / "bpe_fert")
-    bpe.build_bpe_model(spark, sf_dir, mp)
     frozen = sorted(
         map(
             tuple,
-            bpe.q_tokenizer_fertility_from_model(spark, sf_dir, mp).collect(),
+            bpe.q_tokenizer_fertility_from_model(
+                spark, sf_dir, bpe_model
+            ).collect(),
         )
     )
     inline = sorted(
@@ -5219,7 +5253,9 @@ def test_cluster_quality_matches_numpy_replay(spark, sf_dir):
         assert abs(g["db_index"] - db_index) < 1e-5
 
 
-def test_cluster_quality_from_model_matches_inline(spark, sf_dir, tmp_path):
+def test_cluster_quality_from_model_matches_inline(
+    spark, sf_dir, tmp_path, kmeans_model
+):
     """The frozen-model form of the Davies-Bouldin audit is pinned
     IDENTICAL to the inline fit (the stored centroids produce the same
     final assignment; the post-assignment recompute matches
@@ -5227,18 +5263,13 @@ def test_cluster_quality_from_model_matches_inline(spark, sf_dir, tmp_path):
     import pytest as _pytest
 
     from data_ingestion_api_system_loop_ai_spark.operators import kmeans as km
-    from data_ingestion_api_system_loop_ai_spark.operators.semdedup import (
-        build_kmeans_model,
-    )
 
-    mp = str(tmp_path / "km_quality")
     with _pytest.raises(FileNotFoundError):
-        km.q_cluster_quality_from_model(spark, sf_dir, mp)
-    build_kmeans_model(spark, sf_dir, mp)
+        km.q_cluster_quality_from_model(spark, sf_dir, str(tmp_path / "km_quality"))
     frozen = sorted(
         map(
             tuple,
-            km.q_cluster_quality_from_model(spark, sf_dir, mp).collect(),
+            km.q_cluster_quality_from_model(spark, sf_dir, kmeans_model).collect(),
         )
     )
     inline = sorted(map(tuple, km.q_cluster_quality(spark, sf_dir).collect()))
